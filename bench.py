@@ -82,98 +82,10 @@ def main() -> None:
     mixed = synth_transcripts(spark, sf_dir, turns_per_doc=turns_per_doc)
     timed("extract_mixed", lambda: triples(extract_statements(mixed)), runs=4)
 
+    # every other registry gate once, sorted for a deterministic order
     registry = Q.registry()
-    for name in (
-        "extract_ntriples",
-        "extract_jsonld",
-        "extract_rdfa",
-        "extract_rdfxml",
-        "extract_nquads",
-        "extract_trig",
-        "turn_ordering",
-    ):
-        if name in registry:
-            try:
-                timed(name, lambda n=name: registry[n](spark, sf_dir))
-            except Exception:
-                timings[name] = -1.0
-
-    # priority block: the queries whose round-over-round trend we track
-    # first (stable warm ordering); everything else in the registry is
-    # folded in afterwards so the bench surface can never drift from the
-    # correctness surface
-    for name in ("entity_link", "canonicalize", "pipeline_kg", "kg_edges",
-                 "dedup_minhash", "simhash", "ann_topk", "ann_ivf",
-                 "ann_lsh", "quality_score", "fingerprint", "media_features",
-                 "media_real_decode", "lang_id_ngram",
-                 "vocab_expand", "render_turtle", "render_jsonld", "model_diff",
-                 "pii_redact", "split_assign", "pack_sequences",
-                 "contamination", "kg_bgp", "kg_pagerank", "kg_path", "kg_path_star", "kg_wl_colors", "kg_schema_summary", "kg_literal_stats",
-                 "extract_turtle", "repetition_stats", "kmeans_assign",
-                 "events_asof", "events_interval", "events_funnel", "corpus_mix", "quota_resample",
-                 "quality_topk", "entity_link_fuzzy", "global_shuffle",
-                 "dedup_incremental", "dedup_substring",
-                 "boilerplate_windows", "corpus_quantiles", "kg_degree_stats",
-                 "semdedup", "top_terms", "top_ngrams", "cooccurrence",
-                 "kg_triangles", "kg_node_sim", "kg_bgp_optional",
-                 "c4_filter", "lm_score", "turn_transitions",
-                 "kg_label_prop", "kg_neg_samples", "kg_validate",
-                 "embedding_project", "turn_latency",
-                 "kg_rdfs_infer", "canonicalize_incremental",
-                 "kg_modularity", "kg_neighbor_agg",
-                 "kg_ppr", "kg_snapshot_diff", "kg_adjacency", "kg_random_walks", "kg_skipgram_pairs",
-                 "transcripts_profile", "events_stream_sessions",
-                 "pipeline_training", "text_search", "inverted_index",
-                 "skew_salted_join", "bm25_search", "hybrid_search",
-                 "events_retention", "kg_entity_card", "kg_sparql",
-                 "kg_sparql_construct", "kg_sparql_path",
-                 "kg_sparql_values", "kg_sparql_having",
-                 "kg_sparql_graph", "kg_sparql_describe",
-                 "kg_sparql_exists", "kg_sparql_bind",
-                 "kg_sparql_subquery",
-                 "kg_sparql_agg_filter", "kg_sparql_group_concat",
-                 "kg_sparql_describe_where", "ppmi", "kg_sparql_update",
-                 "knn_graph", "embedding_quantize", "quantized_topk", "knn_classify",
-                 "semantic_clusters", "winnow",
-                 "kg_sparql_seq", "kg_sparql_nps", "kg_sparql_path_zero",
-                 "kg_hits", "kg_kcore", "agent_loops",
-                 "dedup_survivors_quality", "kg_sparql_ask", "kg_reach_seeded", "kg_sparql_page", "kg_comention", "kg_sparql_optional_filter", "kg_sparql_neg_fail", "kg_sparql_agg_optional",
-                 "weighted_sample", "ngram_novelty", "lang_id_confusion", "kg_entity_timeline",
-                 "kg_edge_provenance", "stratified_sample", "segment_dedup",
-                 "graph_stats", "kg_sparql_count_distinct", "pq_encode", "pq_search", "pq_ivf_search", "ann_recall", "kg_scc",
-                 "bpe_train", "bpe_segment", "embedding_dim_recall",
-                 "kg_list_members", "kg_cardinality_sketch",
-                 "vocab_overlap_sketch", "kg_neighborhood_anf",
-                 "token_freq_sketch", "stream_cardinality",
-                 "kg_temporal_reach", "kg_asof_view",
-                 "kg_owl_infer", "kg_sameas_fuse", "kg_truth_vote",
-                 "wordpiece_train", "kg_quotient", "kg_pred_align",
-                 "stream_heavy_hitters", "kg_weighted_path",
-                 "dsir_select", "kg_harmonic",
-                 "unigram_vocab", "unigram_segment",
-                 "kg_link_predict", "kg_c14n", "kg_c14n_hash",
-                 "stream_c14n_dedup", "conv_topic_shifts", "hamming_topk",
-                 "chat_render", "preference_bt", "conv_near_dup",
-                 "pipeline_sft", "kg_node2vec", "kg_link_ranking",
-                 "pack_manifest", "kg_transitive_reduce",
-                 "embedding_label_prop", "render_trig",
-                 "transcripts_validate", "textrank_summary", "kg_ktruss", "stream_sft",
-                 "events_allen", "embedding_drift", "kg_sparql_cbd",
-                 "span_corruption", "fim_transform", "instruction_pairs",
-                 "curriculum_order"):
-        if name in registry:
-            try:
-                timed(name, lambda n=name: registry[n](spark, sf_dir))
-            except Exception:
-                timings[name] = -1.0
-
-    # remainder sweep: every registry query not timed above, sorted for
-    # a deterministic order. EXCLUDE documents the (currently empty)
-    # escape hatch — a query may only be skipped with a recorded reason,
-    # which lands in the JSON so BENCH_rN carries the full accounting.
-    EXCLUDE: dict[str, str] = {}
     for name in sorted(registry):
-        if name in timings or name in EXCLUDE:
+        if name in timings:
             continue
         try:
             timed(name, lambda n=name: registry[n](spark, sf_dir))
@@ -211,7 +123,6 @@ def main() -> None:
                 "turns_per_doc": turns_per_doc,
                 "host_steal_pct": steal_pct,
                 "stream_work_sec": stream_work,
-                "excluded": EXCLUDE,
             }
         )
     )

@@ -559,6 +559,15 @@ def compact(expanded: list, context: Any, *, base_uri: str = "") -> tuple[dict, 
 # ------------------------------------------------------------------ flatten
 
 
+def _add_value(arr: list, item: dict) -> None:
+    """Append ``item`` to a property's values unless an equal value is
+    already there. Each ``@list`` is its own bnode chain, so equal
+    sibling lists are two lists and are always appended."""
+    key = canonical_json(item)
+    if "@list" in item or all(canonical_json(x) != key for x in arr):
+        arr.append(item)
+
+
 def flatten(expanded: list) -> list:
     """Flatten expanded JSON-LD: node-map generation with a fresh blank
     node issuer (``_:b0`` …), duplicate-node merge, reverse-property
@@ -605,14 +614,14 @@ def flatten(expanded: list) -> list:
             pred_k = issue(pred) if pred.startswith("_:") else pred
             tgt = entry.setdefault(pred_k, [])
             for v in values:
-                _add(tgt, _ref_value(v, graph))
+                _add_value(tgt, _ref_value(v, graph))
         if "@reverse" in node:
             for pred, values in node["@reverse"].items():
                 pred_k = issue(pred) if pred.startswith("_:") else pred
                 for v in values:
                     src = walk(v, graph)
                     src_entry = get_node(graph, src)
-                    _add(src_entry.setdefault(pred_k, []), {"@id": nid})
+                    _add_value(src_entry.setdefault(pred_k, []), {"@id": nid})
         if "@graph" in node:
             for child in node["@graph"]:
                 walk(child, nid)
@@ -630,11 +639,6 @@ def flatten(expanded: list) -> list:
                 return {**v, "@type": issue(dt)}
             return v
         return {"@id": walk(v, graph)}
-
-    def _add(arr: list, item) -> None:
-        key = canonical_json(item)
-        if all(canonical_json(x) != key for x in arr):
-            arr.append(item)
 
     for node in expanded:
         walk(node, "@default")
@@ -749,9 +753,7 @@ def frame(expanded: list, frame_doc: Any, *, base_uri: str = "") -> tuple[dict, 
                     continue
                 tgt = entry.setdefault(k, [])
                 for item in v:
-                    key = canonical_json(item)
-                    if all(canonical_json(x) != key for x in tgt):
-                        tgt.append(item)
+                    _add_value(tgt, item)
 
     absorb(flatten(expanded))
 

@@ -903,8 +903,8 @@ def paragraph_dedup(
 ) -> DataFrame:
     """CCNet-style corpus-wide PARAGRAPH dedup with reconstruction →
     (doc_id, n_paras, n_kept, clean_text): text splits at blank lines
-    (one-or-more empty/whitespace-only lines — the ccnet paragraph
-    unit), each paragraph dedupes corpus-wide on the shared
+    (one-or-more empty/whitespace-only lines, LF or CRLF — the ccnet
+    paragraph unit), each paragraph dedupes corpus-wide on the shared
     :func:`ccnet_norm` key, first occurrence (lowest (doc, para_idx))
     wins, and survivors reassemble in order joined by a blank line.
     Same plan shape and totality contract as :func:`sentence_dedup`
@@ -921,7 +921,7 @@ def paragraph_dedup(
         docs.select(
             F.col(id_col),
             F.posexplode(
-                F.split(F.col(text_col), r"\n[ \t]*\n+")
+                F.split(F.col(text_col), r"\r?\n[ \t\r]*\n[\r\n]*")
             ).alias("para_idx", "paragraph"),
         )
         # keep only paragraphs with any non-whitespace (F.trim strips

@@ -21,7 +21,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..spark_util import is_missing_path
+from ..spark_util import is_missing_path, is_missing_table
 
 N_BUCKETS = 64
 
@@ -179,10 +179,9 @@ def iceberg_catalog(spark) -> str | None:
     points at an Iceberg Spark catalog class. Deployments can name
     theirs explicitly via ``spark.semargl.iceberg.catalog``; otherwise
     the conventional names (``iceberg``, ``local``, ``spark_catalog``)
-    are probed. This is the feature flag that routes
-    :func:`merge_upsert` to a real ``MERGE INTO`` instead of the
-    parquet dynamic-overwrite stand-in — pure conf inspection, no JVM
-    access, so it works identically under Spark Connect."""
+    are probed. Callers use it to pick a catalog for
+    ``merge_upsert(..., backend="iceberg")`` — pure conf inspection, no
+    JVM access, so it works identically under Spark Connect."""
     names: list[str] = []
     try:
         names.append(spark.conf.get("spark.semargl.iceberg.catalog"))
@@ -211,10 +210,14 @@ def _merge_upsert_iceberg(
     upsert, so the two backends are interchangeable to callers. The
     update/insert split is counted with a left-semi against the current
     snapshot BEFORE the merge (Iceberg's MERGE reports no row counts to
-    the session); a missing table is created from the delta."""
+    the session); a missing table is created from the delta. The delta
+    is evaluated once, so the counts and the merge see the same rows."""
+    updates = updates.localCheckpoint(eager=True)
     try:
         cur = spark.table(table)
-    except Exception:
+    except Exception as exc:
+        if not is_missing_table(exc):
+            raise
         updates.writeTo(table).using("iceberg").create()
         return {"updated": 0, "inserted": updates.count()}
     n_updated = cur.join(updates.select(*key_cols), key_cols, "left_semi").count()
@@ -222,12 +225,14 @@ def _merge_upsert_iceberg(
     view = f"_semargl_merge_src_{abs(hash(table)) % 10**8}"
     updates.createOrReplaceTempView(view)
     on = " AND ".join(f"t.{k} = u.{k}" for k in key_cols)
-    spark.sql(
-        f"MERGE INTO {table} t USING {view} u ON {on} "
-        "WHEN MATCHED THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    spark.catalog.dropTempView(view)
+    try:
+        spark.sql(
+            f"MERGE INTO {table} t USING {view} u ON {on} "
+            "WHEN MATCHED THEN UPDATE SET * "
+            "WHEN NOT MATCHED THEN INSERT *"
+        )
+    finally:
+        spark.catalog.dropTempView(view)
     return {"updated": n_updated, "inserted": n_inserted}
 
 
@@ -237,7 +242,7 @@ def merge_upsert(
     updates: DataFrame,
     key_cols: list[str],
     bucket_col: str | None = None,
-    backend: str | None = None,
+    backend: str = "parquet",
 ) -> dict:
     """``MERGE INTO`` stand-in over the bucketed parquet table at
     ``path``: WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
@@ -261,20 +266,13 @@ def merge_upsert(
     concurrent-writer atomicity, is exactly what the Iceberg swap buys;
     the row-level outcome is identical).
 
-    Backend selection: ``backend="iceberg"`` (or auto, when ``path``
-    has no ``/`` and :func:`iceberg_catalog` finds a configured
-    catalog) treats ``path`` as an Iceberg table identifier and runs a
-    real ``MERGE INTO`` (:func:`_merge_upsert_iceberg`);
-    ``backend="parquet"`` or a filesystem path keeps the stand-in. The
-    differential test parametrizes over both backends and skips the
-    Iceberg leg when no runtime is on the classpath.
+    Backend selection: only an explicit ``backend="iceberg"`` treats
+    ``path`` as an Iceberg table identifier and runs a real
+    ``MERGE INTO`` (:func:`_merge_upsert_iceberg`); any other value
+    keeps the parquet stand-in, so a relative path is never mistaken
+    for a catalog table. The differential test parametrizes over both
+    backends and skips the Iceberg leg when no catalog is configured.
     """
-    if backend is None:
-        backend = (
-            "iceberg"
-            if "/" not in path and iceberg_catalog(spark)
-            else "parquet"
-        )
     if backend == "iceberg":
         return _merge_upsert_iceberg(spark, path, updates, key_cols)
     bucket_col = bucket_col or key_cols[0]

@@ -1,6 +1,8 @@
-"""Query registry: every implemented operator exposed as a
-``(spark, sf_dir) -> DataFrame`` callable plus (where SQL-expressible) a
-DuckDB oracle that computes the *expected* result analytically.
+"""Query registry. A gate is declared once, as a module-level
+``q_<gate>(spark, sf_dir) -> DataFrame`` callable in this module,
+queries_pipeline or queries_events; registry() discovers it by that
+name. Each gate has a DuckDB oracle ``ORACLES["<gate>"]`` in the same
+module that computes the *expected* result analytically.
 
 The synthetic transcripts are closed-form functions of (did, turn_idx)
 (sources/transcripts.py), so the oracles reconstruct the expected
@@ -11,6 +13,7 @@ mismatch.
 
 from __future__ import annotations
 
+import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +47,14 @@ def _extract_single_fmt(fmt: str):
         return triples(extract_statements(t)).select(*cols)
 
     return q
+
+
+q_extract_ntriples = _extract_single_fmt("ntriples")
+q_extract_nquads = _extract_single_fmt("nquads")
+q_extract_trig = _extract_single_fmt("trig")
+q_extract_jsonld = _extract_single_fmt("jsonld")
+q_extract_rdfa = _extract_single_fmt("rdfa")
+q_extract_rdfxml = _extract_single_fmt("rdfxml")
 
 
 def q_extract_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,14 +111,7 @@ def q_entity_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES: dict[str, str] = {}
 
 
-def _oracle(name: str, sql: str) -> None:
-    ORACLES[name] = sql
-
-
-_oracle(
-    "extract_ntriples",
-    _SEED
-    + f"""
+ORACLES["extract_ntriples"] = _SEED + f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
        'urn:p:name' AS pred, {_NT_NAME} AS obj, 'literal' AS obj_kind,
        {_V} AS lang, {_V} AS dtype FROM t
@@ -120,13 +124,9 @@ SELECT 'c'||did, tix, 'urn:e:'||did, 'urn:p:score', (did%100)||'.5',
 UNION ALL
 SELECT 'c'||did, tix, '_:bc'||did||'_'||tix||'_n0', 'urn:p:label',
        'turn '||tix, 'literal', 'en', {_V} FROM t
-""",
-)
+"""
 
-_oracle(
-    "extract_nquads",
-    _SEED
-    + f"""
+ORACLES["extract_nquads"] = _SEED + f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
        'urn:p:name' AS pred, 'Entity '||did AS obj, 'literal' AS obj_kind,
        {_V} AS lang, {_V} AS dtype, 'urn:g:'||(did%10) AS graph FROM t
@@ -136,13 +136,9 @@ SELECT 'c'||did, tix, 'urn:e:'||did, 'urn:p:knows', 'urn:e:'||(did+1),
 UNION ALL
 SELECT 'c'||did, tix, '_:bc'||did||'_'||tix||'_n0', 'urn:p:label', 'g',
        'literal', 'en', {_V}, 'urn:g:'||(did%10) FROM t
-""",
-)
+"""
 
-_oracle(
-    "extract_trig",
-    _SEED
-    + f"""
+ORACLES["extract_trig"] = _SEED + f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
        'urn:p:name' AS pred, 'Entity '||did AS obj, 'literal' AS obj_kind,
        {_V} AS lang, {_V} AS dtype, {_V} AS graph FROM t
@@ -159,8 +155,7 @@ UNION ALL
 SELECT 'c'||did, tix, 'urn:e:'||did,
        'http://www.w3.org/1999/02/22-rdf-syntax-ns#type', 'urn:t:Thing',
        'iri', {_V}, {_V}, 'urn:g:meta' FROM t
-""",
-)
+"""
 
 _JSONLD_ROWS = f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
@@ -183,7 +178,7 @@ SELECT 'c'||did, tix, 'urn:e:'||did, 'urn:p:tag', 'b',
        'literal', {_V}, {_V} FROM t
 """
 
-_oracle("extract_jsonld", _SEED + _JSONLD_ROWS)
+ORACLES["extract_jsonld"] = _SEED + _JSONLD_ROWS
 
 _RDFA_ROWS = f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
@@ -196,9 +191,9 @@ SELECT 'c'||did, tix, 'urn:e:'||did, 'http://purl.org/dc/terms/relation',
 
 # turtle round-trips the ntriples-extracted triples exactly (labels
 # included), so its oracle is the same closed form
-_oracle("extract_turtle", ORACLES["extract_ntriples"])
+ORACLES["extract_turtle"] = ORACLES["extract_ntriples"]
 
-_oracle("extract_rdfa", _SEED + _RDFA_ROWS)
+ORACLES["extract_rdfa"] = _SEED + _RDFA_ROWS
 
 _RDFXML_ROWS = f"""
 SELECT 'c'||did AS conv_id, tix AS turn_idx, 'urn:e:'||did AS subj,
@@ -209,13 +204,10 @@ SELECT 'c'||did, tix, 'urn:e:'||did, 'urn:p:knows', 'urn:e:'||(did+1),
        'iri', {_V}, {_V} FROM t
 """
 
-_oracle("extract_rdfxml", _SEED + _RDFXML_ROWS)
+ORACLES["extract_rdfxml"] = _SEED + _RDFXML_ROWS
 
 # mixed corpus: per-kind filters on (did*7+tix)%5
-_oracle(
-    "extract_mixed",
-    _SEED
-    + f"""
+ORACLES["extract_mixed"] = _SEED + f"""
 , nt AS (SELECT * FROM t WHERE (did*7+tix)%5 = 0)
 , jl AS (SELECT * FROM t WHERE (did*7+tix)%5 = 1)
 , ra AS (SELECT * FROM t WHERE (did*7+tix)%5 = 2)
@@ -235,41 +227,29 @@ UNION ALL
 {_JSONLD_ROWS.replace(" FROM t", " FROM jl")}
 UNION ALL
 {_RDFA_ROWS.replace(" FROM t", " FROM ra")}
-""",
-)
+"""
 
-_oracle(
-    "extract_errors",
-    _SEED
-    + """
+ORACLES["extract_errors"] = _SEED + """
 SELECT 'c'||did AS conv_id, CAST(COUNT(*) AS BIGINT) AS n_errors
 FROM t WHERE (did*7+tix)%5 = 4 GROUP BY did
-""",
-)
+"""
 
-_oracle(
-    "turn_ordering",
-    _SEED
-    + """
+ORACLES["turn_ordering"] = _SEED + """
 SELECT 'c'||did AS conv_id, tix AS turn_idx,
        CASE WHEN tix%3=0 THEN 'user' WHEN tix%3=1 THEN 'assistant'
             ELSE 'tool' END AS role,
        CAST(ROW_NUMBER() OVER (PARTITION BY did ORDER BY tix) AS INT) AS turn_seq
 FROM t
-""",
-)
+"""
 
-_oracle(
-    "entity_dictionary",
-    """
+ORACLES["entity_dictionary"] = """
 SELECT 'urn:e:'||CAST(doc_id AS INT) AS canonical_iri,
        'entity '||CAST(doc_id AS INT) AS surface_form, 1.0 AS weight
 FROM documents
 UNION ALL
 SELECT 'urn:e:'||CAST(doc_id AS INT), 'ent '||CAST(doc_id AS INT), 0.5
 FROM documents
-""",
-)
+"""
 
 
 def q_turn_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,10 +261,7 @@ def q_turn_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return turn_transitions(synth_transcripts(spark, sf_dir))
 
 
-_oracle(
-    "turn_transitions",
-    _SEED
-    + """
+ORACLES["turn_transitions"] = _SEED + """
 , r AS (SELECT did, tix,
     CASE WHEN tix%3=0 THEN 'user' WHEN tix%3=1 THEN 'assistant'
          ELSE 'tool' END AS role,
@@ -295,8 +272,7 @@ x AS (SELECT role,
 SELECT from_role, role AS to_role, CAST(COUNT(*) AS BIGINT) AS n_transitions,
        CAST(SUM(gap) AS BIGINT) AS sum_gap_s
 FROM x WHERE from_role IS NOT NULL GROUP BY 1, 2
-""",
-)
+"""
 
 
 def q_role_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -307,10 +283,7 @@ def q_role_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return role_stats(synth_transcripts(spark, sf_dir))
 
 
-_oracle(
-    "role_stats",
-    _SEED
-    + """
+ORACLES["role_stats"] = _SEED + """
 SELECT CASE WHEN tix%3=0 THEN 'user' WHEN tix%3=1 THEN 'assistant'
             ELSE 'tool' END AS role,
        CAST(COUNT(*) AS BIGINT) AS n_turns,
@@ -318,8 +291,7 @@ SELECT CASE WHEN tix%3=0 THEN 'user' WHEN tix%3=1 THEN 'assistant'
        CAST(SUM(CASE WHEN tix%3=2 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_tool_turns
 FROM t GROUP BY 1
-""",
-)
+"""
 
 
 def q_tool_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,9 +305,7 @@ def q_tool_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_oracle(
-    "tool_stats",
-    r"""
+ORACLES["tool_stats"] = r"""
 WITH t AS (SELECT CAST(doc_id AS INT) AS did, CAST(tix AS INT) AS tix
            FROM documents
            CROSS JOIN (SELECT unnest(generate_series(0,7)) AS tix)),
@@ -359,8 +329,7 @@ SELECT tool, CAST(COUNT(*) AS BIGINT) AS n_calls,
        CAST(SUM(out_bytes) AS BIGINT) AS sum_out_bytes,
        CAST(COUNT(*)*60 AS BIGINT) AS sum_latency_s
 FROM tools GROUP BY tool
-""",
-)
+"""
 
 
 def q_tool_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -373,9 +342,7 @@ def q_tool_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tool_chains(synth_transcripts(spark, sf_dir, turns_per_doc=12))
 
 
-_oracle(
-    "tool_chains",
-    """
+ORACLES["tool_chains"] = """
 WITH ids AS (SELECT CAST(doc_id AS INT) AS did FROM documents),
 names(i, nm) AS (VALUES (0,'rdf_extract'),(1,'web_search'),(2,'code_exec')),
 steps AS (SELECT did, unnest(generate_series(0,2)) AS r FROM ids)
@@ -384,8 +351,7 @@ FROM steps s
 JOIN names f ON f.i = (s.did + s.r) % 3
 JOIN names tt ON tt.i = (s.did + s.r + 1) % 3
 GROUP BY 1, 2
-""",
-)
+"""
 
 
 def q_agent_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,9 +372,7 @@ def q_agent_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agent_loops(t, min_run=2)
 
 
-_oracle(
-    "agent_loops",
-    """
+ORACLES["agent_loops"] = """
 WITH t AS (SELECT CAST(doc_id AS INT) AS did, CAST(tix AS INT) AS tix
            FROM documents
            CROSS JOIN (SELECT unnest(generate_series(0,11)) AS tix)),
@@ -432,8 +396,7 @@ SELECT 'c'||did AS conv_id,
        CAST(SUM(CASE WHEN run_len >= 2 THEN 1 ELSE 0 END) AS BIGINT)
          AS n_stuck_runs
 FROM runs GROUP BY did
-""",
-)
+"""
 
 
 def q_turn_edit_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,9 +421,7 @@ def q_turn_edit_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     return turn_edit_sim(t, role="assistant", near_pm=250)
 
 
-_oracle(
-    "turn_edit_sim",
-    """
+ORACLES["turn_edit_sim"] = """
 WITH t AS (SELECT CAST(doc_id AS INT) AS did, CAST(tix AS INT) AS tix
            FROM documents
            CROSS JOIN (SELECT unnest(generate_series(0,7)) AS tix)),
@@ -483,8 +444,7 @@ SELECT conv_id, CAST(tix AS INT) AS turn_idx,
          // GREATEST(GREATEST(LENGTH(text), LENGTH(ptext)), 1) <= 250
          AS is_near
 FROM p WHERE ptix IS NOT NULL
-""",
-)
+"""
 
 
 def q_extract_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,9 +479,7 @@ def q_extract_microdata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_oracle(
-    "extract_microdata",
-    """
+ORACLES["extract_microdata"] = """
 WITH ids AS (SELECT CAST(doc_id AS INT) AS did FROM documents)
 SELECT 'c'||did AS conv_id, CAST(0 AS INT) AS turn_idx,
        'urn:e:'||did AS subj,
@@ -547,8 +505,7 @@ SELECT 'c'||did, CAST(0 AS INT), '_:bc'||did||'_0_n0',
        'http://www.w3.org/1999/xhtml/microdata#note',
        'n'||did, 'literal', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
 FROM ids
-""",
-)
+"""
 
 
 def q_extract_remote_ctx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -586,9 +543,7 @@ def q_extract_remote_ctx(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(*STMT_COLS)
 
 
-_oracle(
-    "extract_remote_ctx",
-    """
+ORACLES["extract_remote_ctx"] = """
 WITH ids AS (SELECT CAST(doc_id AS INT) AS did FROM documents)
 SELECT 'c'||did AS conv_id, CAST(0 AS INT) AS turn_idx,
        'urn:e:'||did AS subj, 'urn:p:name' AS pred,
@@ -600,8 +555,7 @@ SELECT 'c'||did, CAST(0 AS INT), 'urn:e:'||did, 'urn:p:knows',
        'urn:e:'||(did+1), 'iri', CAST(NULL AS VARCHAR),
        CAST(NULL AS VARCHAR)
 FROM ids
-""",
-)
+"""
 
 
 def _shipped(fn: Callable[[SparkSession, str], DataFrame]):
@@ -615,49 +569,38 @@ def _shipped(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+def _declared() -> tuple[
+    dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]
+]:
+    """(gates, oracles) of the three query modules. Every module-level
+    callable named ``q_<gate>`` is the gate ``<gate>``; the modules'
+    ORACLES dicts merge into one. The two name sets must be equal, so a
+    gate without an oracle, or an oracle without a gate, cannot ship."""
     from . import queries_events, queries_pipeline
 
-    merged = dict(_registry())
-    merged.update(queries_pipeline.registry())
-    merged.update(queries_events.registry())
-    # NOTE: the merged oracle view comes from oracles(); registry() must
-    # not mutate the module-global ORACLES as a side effect
-    return {name: _shipped(fn) for name, fn in merged.items()}
+    gates: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    merged: dict[str, str] = {}
+    for mod in (sys.modules[__name__], queries_pipeline, queries_events):
+        for attr, fn in vars(mod).items():
+            if attr.startswith("q_") and callable(fn):
+                gates[attr[2:]] = fn
+        merged.update(mod.ORACLES)
+    missing = sorted(gates.keys() - merged.keys())
+    orphans = sorted(merged.keys() - gates.keys())
+    if missing or orphans:
+        raise RuntimeError(
+            f"gates without an oracle: {missing}; "
+            f"oracles without a gate: {orphans}"
+        )
+    return gates, merged
 
 
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "extract_ntriples": _extract_single_fmt("ntriples"),
-        "extract_nquads": _extract_single_fmt("nquads"),
-        "extract_trig": _extract_single_fmt("trig"),
-        "extract_jsonld": _extract_single_fmt("jsonld"),
-        "extract_rdfa": _extract_single_fmt("rdfa"),
-        "extract_rdfxml": _extract_single_fmt("rdfxml"),
-        "extract_turtle": q_extract_turtle,
-        "extract_mixed": q_extract_mixed,
-        "extract_files": q_extract_files,
-        "extract_errors": q_extract_errors,
-        "extract_remote_ctx": q_extract_remote_ctx,
-        "extract_microdata": q_extract_microdata,
-        "turn_ordering": q_turn_ordering,
-        "turn_transitions": q_turn_transitions,
-        "role_stats": q_role_stats,
-        "tool_stats": q_tool_stats,
-        "tool_chains": q_tool_chains,
-        "agent_loops": q_agent_loops,
-        "turn_edit_sim": q_turn_edit_sim,
-        "entity_dictionary": q_entity_dictionary,
-    }
+def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: _shipped(fn) for name, fn in _declared()[0].items()}
 
 
 def oracles() -> dict[str, str]:
-    from . import queries_events, queries_pipeline
-
-    merged = dict(ORACLES)
-    merged.update(queries_pipeline.ORACLES)
-    merged.update(queries_events.ORACLES)
-    return merged
+    return _declared()[1]
 
 
 def q_extract_files(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -140,17 +140,6 @@ FROM events l ASOF LEFT JOIN errs r
 """
 
 
-def registry():
-    return {
-        "events_sessionize": q_events_sessionize,
-        "events_metrics": q_events_metrics,
-        "events_props_json": q_events_props_json,
-        "events_asof": q_events_asof,
-        "events_interval": q_events_interval,
-        "events_funnel": q_events_funnel,
-    }
-
-
 def q_events_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-interval join (operators/asof.py interval_join): every
     signup event opens a half-open 2-day window for its user; attach

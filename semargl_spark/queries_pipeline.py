@@ -1,14 +1,12 @@
 r"""Pipeline + training-data query registry (linking, canonicalization,
 graph materialization, dedup, similarity, text analysis, multimodal) —
-each with a DuckDB oracle where the semantics are SQL-expressible.
+each with a DuckDB oracle.
 
-Split from queries.py (extraction) for readability; merged by
-queries.registry().
+Split from queries.py (extraction) for readability; queries.registry()
+discovers the ``q_<gate>`` functions here by name.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -2802,277 +2800,13 @@ HAVING window_start + INTERVAL 1 HOUR <= (SELECT w FROM wm)
 def _register_stream_oracle() -> None:
     # identical expected output to the batch ntriples extraction; the
     # lazy import avoids a cycle (queries.py imports this module only
-    # inside registry()/oracles())
+    # inside _declared())
     from .queries import ORACLES as _EXTRACT_ORACLES
 
     ORACLES["stream_extract"] = _EXTRACT_ORACLES["extract_ntriples"]
 
 
 _register_stream_oracle()
-
-
-def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        "stream_extract": q_stream_extract,
-        "stream_state": q_stream_state,
-        "events_stream_hourly": q_events_stream_hourly,
-        "turn_text_hash": q_turn_text_hash,
-        "entity_link": q_entity_link,
-        "canonicalize": q_canonicalize,
-        "kg_edges": q_kg_edges,
-        "kg_bgp": q_kg_bgp,
-        "kg_bgp_optional": q_kg_bgp_optional,
-        "kg_bgp_filter": q_kg_bgp_filter,
-        "kg_bgp_union": q_kg_bgp_union,
-        "kg_bgp_agg": q_kg_bgp_agg,
-        "kg_construct": q_kg_construct,
-        "kg_triangles": q_kg_triangles,
-        "kg_hits": q_kg_hits,
-        "kg_kcore": q_kg_kcore,
-        "kg_node_sim": q_kg_node_sim,
-        "kg_pagerank": q_kg_pagerank,
-        "stream_kg_edges": q_stream_kg_edges,
-        "pipeline_kg": q_pipeline_kg,
-        "lineage": q_lineage,
-        "lineage_exact": q_lineage_exact,
-        "vocab_expand": q_vocab_expand,
-        "render_ntriples": q_render_ntriples,
-        "render_turtle": q_render_turtle,
-        "render_turtle_inline": q_render_turtle_inline,
-        "render_nquads": q_render_nquads,
-        "model_diff": q_model_diff,
-        "conv_reassemble": q_conv_reassemble,
-        "conv_reassemble_chunked": q_conv_reassemble_chunked,
-        "skew_salted_agg": q_skew_salted_agg,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_survivors": q_dedup_survivors,
-        "dedup_survivors_quality": q_dedup_survivors_quality,
-        "simhash": q_simhash,
-        "ann_topk": q_ann_topk,
-        "ann_ivf": q_ann_ivf,
-        "ann_recall_sampled": q_ann_recall_sampled,
-        "ann_lsh": q_ann_lsh,
-        "embedding_near_dups": q_embedding_near_dups,
-        "token_count": q_token_count,
-        "lang_id": q_lang_id,
-        "lang_id_ngram": q_lang_id_ngram,
-        "lang_id_model": q_lang_id_model,
-        "quality_model": q_quality_model,
-        "quality_score": q_quality_score,
-        "fingerprint": q_fingerprint,
-        "pii_redact": q_pii_redact,
-        "transcripts_pii": q_transcripts_pii,
-        "sentence_dedup": q_sentence_dedup,
-        "paragraph_dedup": q_paragraph_dedup,
-        "c4_filter": q_c4_filter,
-        "lm_score": q_lm_score,
-        "split_assign": q_split_assign,
-        "pack_sequences": q_pack_sequences,
-        "contamination": q_contamination,
-        "media_features": q_media_features,
-        "media_resize": q_media_resize,
-        "media_real_decode": q_media_real_decode,
-        "media_real_resize": q_media_real_resize,
-        "kg_path": q_kg_path,
-        "kg_path_star": q_kg_path_star,
-        "kg_wl_colors": q_kg_wl_colors,
-        "kg_schema_summary": q_kg_schema_summary,
-        "kg_literal_stats": q_kg_literal_stats,
-        "repetition_stats": q_repetition_stats,
-        "kmeans_assign": q_kmeans_assign,
-        "semdedup": q_semdedup,
-        "entity_link_fuzzy": q_entity_link_fuzzy,
-        "corpus_mix": q_corpus_mix,
-        "quota_resample": q_quota_resample,
-        "quality_topk": q_quality_topk,
-        "preference_pairs": q_preference_pairs,
-        "embedding_gram": q_embedding_gram,
-        "global_shuffle": q_global_shuffle,
-        "stream_dedup": q_stream_dedup,
-        "dedup_incremental": q_dedup_incremental,
-        "dedup_substring": q_dedup_substring,
-        "boilerplate_windows": q_boilerplate_windows,
-        "top_terms": q_top_terms,
-        "top_ngrams": q_top_ngrams,
-        "context_windows": q_context_windows,
-        "bpe_pairs": q_bpe_pairs,
-        "bpe_train": q_bpe_train,
-        "bpe_train_batched": q_bpe_train_batched,
-        "wordpiece_train_batched": q_wordpiece_train_batched,
-        "bpe_segment": q_bpe_segment,
-        "corpus_quantiles": q_corpus_quantiles,
-        "kg_degree_stats": q_kg_degree_stats,
-        "kg_node_index": q_kg_node_index,
-        "kg_neg_samples": q_kg_neg_samples,
-        "kg_bgp_minus": q_kg_bgp_minus,
-        "kg_bgp_topk": q_kg_bgp_topk,
-        "kg_path_alt": q_kg_path_alt,
-        "kg_label_prop": q_kg_label_prop,
-        "kg_component_sizes": q_kg_component_sizes,
-        "kg_validate": q_kg_validate,
-        "events_stream_sessions": q_events_stream_sessions,
-        "embedding_project": q_embedding_project,
-        "turn_latency": q_turn_latency,
-        "kg_rdfs_infer": q_kg_rdfs_infer,
-        "events_stream_join": q_events_stream_join,
-        "canonicalize_incremental": q_canonicalize_incremental,
-        "kg_neighbor_agg": q_kg_neighbor_agg,
-        "kg_modularity": q_kg_modularity,
-        "kg_adjacency": q_kg_adjacency,
-        "transcripts_profile": q_transcripts_profile,
-        "kg_ppr": q_kg_ppr,
-        "kg_snapshot_diff": q_kg_snapshot_diff,
-        "pipeline_training": q_pipeline_training,
-        "text_search": q_text_search,
-        "inverted_index": q_inverted_index,
-        "skew_salted_join": q_skew_salted_join,
-        "kg_entity_card": q_kg_entity_card,
-        "events_retention": q_events_retention,
-        "kg_growth_daily": q_kg_growth_daily,
-        "bm25_search": q_bm25_search,
-        "hybrid_search": q_hybrid_search,
-        "knn_classify": q_knn_classify,
-        "turn_role_pivot": q_turn_role_pivot,
-        "events_cube": q_events_cube,
-        "kg_sparql": q_kg_sparql,
-        "kg_sparql_agg": q_kg_sparql_agg,
-        "kg_sparql_construct": q_kg_sparql_construct,
-        "kg_sparql_values": q_kg_sparql_values,
-        "kg_sparql_path": q_kg_sparql_path,
-        "kg_sparql_seq": q_kg_sparql_seq,
-        "kg_sparql_ask": q_kg_sparql_ask,
-        "kg_reach_seeded": q_kg_reach_seeded,
-        "kg_sparql_page": q_kg_sparql_page,
-        "kg_comention": q_kg_comention,
-        "kg_sparql_optional_filter": q_kg_sparql_optional_filter,
-        "kg_sparql_neg_fail": q_kg_sparql_neg_fail,
-        "kg_sparql_agg_optional": q_kg_sparql_agg_optional,
-        "kg_sparql_nps": q_kg_sparql_nps,
-        "kg_sparql_path_zero": q_kg_sparql_path_zero,
-        "kg_sparql_having": q_kg_sparql_having,
-        "kg_sparql_graph": q_kg_sparql_graph,
-        "stream_canon": q_stream_canon,
-        "kg_sparql_describe": q_kg_sparql_describe,
-        "kg_sparql_exists": q_kg_sparql_exists,
-        "kg_sparql_bind": q_kg_sparql_bind,
-        "kg_sparql_subquery": q_kg_sparql_subquery,
-        "render_jsonld": q_render_jsonld,
-        "kg_sparql_agg_filter": q_kg_sparql_agg_filter,
-        "kg_sparql_group_concat": q_kg_sparql_group_concat,
-        "kg_sparql_describe_where": q_kg_sparql_describe_where,
-        "kg_random_walks": q_kg_random_walks,
-        "kg_skipgram_pairs": q_kg_skipgram_pairs,
-        "cooccurrence": q_cooccurrence,
-        "ppmi": q_ppmi,
-        "kg_sparql_update": q_kg_sparql_update,
-        "knn_graph": q_knn_graph,
-        "embedding_quantize": q_embedding_quantize,
-        "quantized_topk": q_quantized_topk,
-        "semantic_clusters": q_semantic_clusters,
-        "winnow": q_winnow,
-        "weighted_sample": q_weighted_sample,
-        "ngram_novelty": q_ngram_novelty,
-        "lang_id_confusion": q_lang_id_confusion,
-        "kg_entity_timeline": q_kg_entity_timeline,
-        "kg_edge_provenance": q_kg_edge_provenance,
-        "stratified_sample": q_stratified_sample,
-        "segment_dedup": q_segment_dedup,
-        "graph_stats": q_graph_stats,
-        "kg_sparql_count_distinct": q_kg_sparql_count_distinct,
-        "pq_encode": q_pq_encode,
-        "pq_search": q_pq_search,
-        "pq_ivf_search": q_pq_ivf_search,
-        "ann_recall": q_ann_recall,
-        "embedding_dim_recall": q_embedding_dim_recall,
-        "kg_list_members": q_kg_list_members,
-        "kg_cardinality_sketch": q_kg_cardinality_sketch,
-        "vocab_overlap_sketch": q_vocab_overlap_sketch,
-        "kg_neighborhood_anf": q_kg_neighborhood_anf,
-        "token_freq_sketch": q_token_freq_sketch,
-        "stream_cardinality": q_stream_cardinality,
-        "kg_temporal_reach": q_kg_temporal_reach,
-        "kg_asof_view": q_kg_asof_view,
-        "kg_scc": q_kg_scc,
-        "kg_owl_infer": q_kg_owl_infer,
-        "kg_sameas_fuse": q_kg_sameas_fuse,
-        "kg_truth_vote": q_kg_truth_vote,
-        "wordpiece_train": q_wordpiece_train,
-        "kg_quotient": q_kg_quotient,
-        "kg_pred_align": q_kg_pred_align,
-        "stream_heavy_hitters": q_stream_heavy_hitters,
-        "kg_weighted_path": q_kg_weighted_path,
-        "dsir_select": q_dsir_select,
-        "kg_harmonic": q_kg_harmonic,
-        "unigram_vocab": q_unigram_vocab,
-        "unigram_segment": q_unigram_segment,
-        "kg_link_predict": q_kg_link_predict,
-        "kg_c14n": q_kg_c14n,
-        "kg_c14n_hash": q_kg_c14n_hash,
-        "stream_c14n_dedup": q_stream_c14n_dedup,
-        "conv_topic_shifts": q_conv_topic_shifts,
-        "hamming_topk": q_hamming_topk,
-        "chat_render": q_chat_render,
-        "preference_bt": q_preference_bt,
-        "conv_near_dup": q_conv_near_dup,
-        "pipeline_sft": q_pipeline_sft,
-        "kg_node2vec": q_kg_node2vec,
-        "kg_link_ranking": q_kg_link_ranking,
-        "pack_manifest": q_pack_manifest,
-        "kg_transitive_reduce": q_kg_transitive_reduce,
-        "embedding_label_prop": q_embedding_label_prop,
-        "render_trig": q_render_trig,
-        "transcripts_validate": q_transcripts_validate,
-        "textrank_summary": q_textrank_summary,
-        "kg_ktruss": q_kg_ktruss,
-        "stream_sft": q_stream_sft,
-        "events_allen": q_events_allen,
-        "embedding_drift": q_embedding_drift,
-        "kg_sparql_cbd": q_kg_sparql_cbd,
-        "span_corruption": q_span_corruption,
-        "fim_transform": q_fim_transform,
-        "instruction_pairs": q_instruction_pairs,
-        "curriculum_order": q_curriculum_order,
-        "canonicalize_skew": q_canonicalize_skew,
-        "dedup_minhash_skew": q_dedup_minhash_skew,
-        "quality_topk_skew": q_quality_topk_skew,
-        "entity_link_skew": q_entity_link_skew,
-        "ann_recall_structured": q_ann_recall_structured,
-        "text_normalize": q_text_normalize,
-        "domain_cap": q_domain_cap,
-        "jsonld_expand": q_jsonld_expand,
-        "kg_bucketed_join": q_kg_bucketed_join,
-        "jsonld_flatten": q_jsonld_flatten,
-        "jsonld_compact": q_jsonld_compact,
-        "jsonld_frame": q_jsonld_frame,
-        "lang_segments": q_lang_segments,
-        "html_main_content": q_html_main_content,
-        "url_canonicalize": q_url_canonicalize,
-        "pipeline_crawl": q_pipeline_crawl,
-        "wet_split": q_wet_split,
-        "warc_split": q_warc_split,
-        "warc_gz_split": q_warc_gz_split,
-        "warc_split_offsets": q_warc_split_offsets,
-        "warc_charset": q_warc_charset,
-        "pipeline_warc": q_pipeline_warc,
-        "pipeline_warc_offsets": q_pipeline_warc_offsets,
-        "robots_filter": q_robots_filter,
-        "robots_directives": q_robots_directives,
-        "html_links": q_html_links,
-        "html_page_meta": q_html_page_meta,
-        "sentence_split": q_sentence_split,
-        "pipeline_discovery": q_pipeline_discovery,
-        "sitemap_frontier": q_sitemap_frontier,
-        "crawl_schedule": q_crawl_schedule,
-        "gopher_filter": q_gopher_filter,
-        "tool_args_validate": q_tool_args_validate,
-        "dedup_regenerations": q_dedup_regenerations,
-        "media_jpeg": q_media_jpeg,
-        "media_jpeg_resize": q_media_jpeg_resize,
-        "pipeline_frontier": q_pipeline_frontier,
-        "stream_crawl": q_stream_crawl,
-    }
 
 
 # ------------------------------------------------- round-2 additions (r2b)

@@ -159,9 +159,11 @@ def _frame_record_spans(data: bytes):
 def gunzip_members(data: bytes) -> bytes:
     """Concatenated gzip members → concatenated plaintext — the
     ``.warc.gz`` layout (Common Crawl compresses each record as its own
-    gzip member so readers can seek to records). Best-effort: a
-    corrupted member ends the scan and the prefix decodes, matching the
-    truncated-tail tolerance of the framing itself.
+    gzip member so readers can seek to records). Complete members only:
+    the first corrupt or torn member ends the scan and contributes
+    nothing, so a truncated archive yields exactly the plaintext of the
+    complete members before the tear — never a partial record. The
+    offset-indexed reader drops a torn final member the same way.
 
     Implemented over the same bounded-chunk streaming scan the offset
     index uses (:func:`_gz_member_spans`): handing zlib the whole

@@ -99,6 +99,18 @@ def is_missing_path(exc: Exception) -> bool:
     return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
 
 
+def is_missing_table(exc: Exception) -> bool:
+    """True iff ``exc`` is Spark's table-not-found analysis error
+    (``TABLE_OR_VIEW_NOT_FOUND``) — the catalog counterpart of
+    :func:`is_missing_path`, with the same reason: every other lookup
+    failure must propagate rather than read as "no table yet"."""
+    from pyspark.errors import AnalysisException
+
+    return isinstance(exc, AnalysisException) and (
+        "TABLE_OR_VIEW_NOT_FOUND" in str(exc)
+    )
+
+
 def delete_path(spark: SparkSession, path: str) -> None:
     """Connect-safe recursive path delete for table maintenance jobs
     (stream_c14n compaction reaping stale partitions): classic sessions

@@ -1547,6 +1547,7 @@ def test_paragraph_dedup_first_wins_and_totality(spark):
         (1, "Beta body.\n\n  \t \n\ncopyright 2031 site!!"),
         (2, "Gamma body."),
         (3, ""),
+        (4, "Delta body.\r\nline two.\r\n\r\nCopyright 2040 Site.\r\n"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r.doc_id: r for r in paragraph_dedup(df).collect()}
@@ -1559,3 +1560,6 @@ def test_paragraph_dedup_first_wins_and_totality(spark):
     assert (got[2].n_paras, got[2].n_kept) == (1, 1)
     # total over input
     assert (got[3].n_paras, got[3].n_kept, got[3].clean_text) == (0, 0, "")
+    # CRLF paragraph breaks split too, so the footer still collapses
+    assert (got[4].n_paras, got[4].n_kept) == (2, 1)
+    assert got[4].clean_text == "Delta body.\r\nline two."

@@ -219,3 +219,49 @@ def test_merge_upsert_propagates_non_missing_read_errors(spark, tmp_path):
         merge_upsert(spark, str(path), df, ["node"])
     # and the garbage dir was not clobbered by a delta-only overwrite
     assert (path / "part-0000.parquet").read_bytes() == b"this is not parquet"
+
+
+def test_merge_upsert_relative_path_stays_parquet_with_iceberg_catalog(spark):
+    """Only an explicit backend="iceberg" runs MERGE INTO: a slash-free
+    relative path is a parquet table even while an Iceberg-named
+    catalog is configured (it used to be routed to the catalog)."""
+    import os
+    import shutil
+    import uuid
+
+    from semargl_spark.operators.materialize import iceberg_catalog
+
+    name = f"merge_rel_{uuid.uuid4().hex[:8]}"
+    # relative paths resolve against the JVM's working directory
+    on_disk = os.path.join(
+        spark.sparkContext._jvm.System.getProperty("user.dir"), name
+    )
+    conf = "spark.sql.catalog.iceberg"
+    spark.conf.set(conf, "org.apache.iceberg.spark.SparkCatalog")
+    try:
+        assert iceberg_catalog(spark) == "iceberg"
+        df = spark.createDataFrame(
+            [("n1", "c1", 1)], "node string, canonical string, degree long"
+        )
+        assert merge_upsert(spark, name, df, ["node"]) == {
+            "updated": 0, "inserted": 1,
+        }
+        rows = spark.read.parquet(on_disk).select("node").collect()
+        assert [r["node"] for r in rows] == ["n1"]
+    finally:
+        spark.conf.unset(conf)
+        shutil.rmtree(on_disk, ignore_errors=True)
+
+
+def test_is_missing_table_only_matches_table_not_found(spark):
+    """The Iceberg leg creates the table only when the probe reports
+    table-not-found; any other lookup failure must propagate."""
+    from semargl_spark.spark_util import is_missing_table
+
+    with pytest.raises(Exception) as missing:
+        spark.table("merge_no_such_table")
+    assert is_missing_table(missing.value)
+    with pytest.raises(Exception) as other:
+        spark.table("a.b.c.d")  # malformed identifier, not a missing table
+    assert not is_missing_table(other.value)
+    assert not is_missing_table(ValueError("TABLE_OR_VIEW_NOT_FOUND"))

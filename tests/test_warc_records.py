@@ -283,6 +283,16 @@ def test_split_warc_records_indexed_matches_whole_file(spark, tmp_path):
     assert len(got) == len(recs_a) + len(recs_b)
 
 
+def test_gunzip_members_torn_final_member_yields_complete_members():
+    from semargl_spark.sources.warc_records import gunzip_members
+
+    recs = _archive_records(3, "g")
+    blob = b"".join(_gz(r) for r in recs)
+    assert gunzip_members(blob) == b"".join(recs)
+    # a torn final member contributes nothing, not a partial record
+    assert gunzip_members(blob[: len(blob) - 40]) == b"".join(recs[:-1])
+
+
 def test_split_warc_records_indexed_truncated_tail(spark, tmp_path):
     from semargl_spark.sources.warc_records import split_warc_records_indexed
 

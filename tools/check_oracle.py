@@ -8,11 +8,12 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -64,15 +65,16 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        sql = os_.get(name)
+        if sql is None:
+            print(f"FAIL {name}: no oracle")
+            failures += 1
+            continue
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
         except Exception as exc:
             print(f"FAIL {name}: spark query raised {type(exc).__name__}: {exc}")
             failures += 1
-            continue
-        sql = os_.get(name)
-        if sql is None:
-            print(f"rows-only {name}: {len(spark_pdf)} rows")
             continue
         try:
             oracle_pdf = con.sql(sql).df()
