@@ -151,6 +151,7 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         materialize_kg,
         write_lineage,
     )
+    from semargl_spark.spark_util import is_missing_path
 
     run_id = run_id or f"run-{int(time.time())}"
     t_start = time.perf_counter()
@@ -171,8 +172,11 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
                 .distinct()
                 .collect()
             }
-        except Exception:  # no lineage yet → fresh run
-            done_stages = set()
+        except Exception as exc:
+            # only "no lineage yet" means a fresh run: a transient or
+            # corrupt ledger read must not silently re-run every stage
+            if not is_missing_path(exc):
+                raise
 
     # named observation on the extraction output: per-run metric rows
     # (statements / error statements) collected by the JVM during the

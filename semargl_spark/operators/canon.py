@@ -20,10 +20,10 @@ Scale notes (10^12-turn corpus):
   and splits skewed hubs (skewJoin enabled in spark_util.tuned_session);
   a celebrity sameAs hub collapses in round 0 since all neighbors adopt
   its minimum in the map-side partial min;
-* per-round ``localCheckpoint`` truncates lineage so the plan stays flat
-  across iterations (no exponential reoptimization);
-* convergence is detected with ``isEmpty()`` on the contracted edge
-  graph — a limit-1 probe on the (shrinking) frontier, not a full-label
+* the round loop runs on ``spark_util.iterate``, which truncates lineage
+  per round (the plan stays flat across iterations) and detects
+  convergence with ``isEmpty()`` on the contracted edge graph — a
+  limit-1 probe on the (shrinking) frontier, not a full-label
   aggregate.
 """
 
@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..spark_util import iterate
 
 
 def _jump(labels: DataFrame) -> DataFrame:
@@ -116,15 +118,10 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
                 F.greatest("src", "dst").alias("dst"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
         )
 
-    g = _contract(e, labels)
-    converged = False
-    for _round in range(max_iter):
-        if g.isEmpty():
-            converged = True
-            break
+    def _round(state, _r):
+        g, labels = state
         gb = g.union(
             g.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -135,23 +132,20 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         # fold the contracted round into the full assignment: a node's
         # label is itself a contracted-graph node, so one label-keyed
         # left join pointer-jumps EVERY member of a merging class at once
-        labels = (
-            labels.join(
-                l2.select(
-                    F.col("node").alias("component"),
-                    F.col("component").alias("_nc"),
-                ),
-                "component",
-                "left",
-            )
-            .select(
-                "node",
-                F.coalesce("_nc", "component").alias("component"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        g = _contract(g, l2)
+        labels = labels.join(
+            l2.select(
+                F.col("node").alias("component"),
+                F.col("component").alias("_nc"),
+            ),
+            "component",
+            "left",
+        ).select("node", F.coalesce("_nc", "component").alias("component"))
+        return _contract(g, l2), labels
 
+    g = _contract(e, labels).localCheckpoint(eager=True)
+    (_, labels), converged = iterate(
+        _round, (g, labels), max_iter, until=lambda s: s[0]
+    )
     if not converged:
         # each round contracts paths ≥4× (neighbor-min + two jumps), so
         # hitting the cap means something is structurally wrong —

@@ -25,8 +25,8 @@ Scale shape (10^9+ vectors, k ≤ 10^4 centroids):
   absorbing the volume; the alternative (array-sum aggregate) does not
   exist in Catalyst and a collect_list-based one would hit the 2 GB row
   ceiling;
-* centroids are ``localCheckpoint``-ed per round (k·d longs), keeping
-  the iterative plan flat.
+* ``spark_util.iterate`` truncates the centroids (k·d longs) per
+  round, keeping the iterative plan flat.
 
 Reference parity: the reference is a parser framework with no
 clustering; this is target-side surface for the embeddings table
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..spark_util import iterate
 
 Q = 1 << 20  # Q20 fixed point
 
@@ -113,6 +115,47 @@ def _assign(
     )
 
 
+def _lloyd(
+    q: DataFrame, k: int, iterations: int, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """Lloyd rounds over a quantized frame ``q`` (vec_id, [*keys,] qv),
+    seeded with the vectors whose id < k → centroids ([*keys,] cluster,
+    cv). Shared by :func:`kmeans_fit` and :func:`pq_fit`, whose
+    ``keys=("subspace",)`` trains every subspace in one pass a round."""
+    centroids = (
+        q.filter(F.col("vec_id") < k)
+        .select(
+            *keys,
+            F.col("vec_id").cast("int").alias("cluster"),
+            F.col("qv").alias("cv"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+    def _round(centroids, _r):
+        assigned = _assign(q, centroids, k, keys).join(q, ["vec_id", *keys])
+        per_dim = assigned.select(
+            *keys, "cluster", F.posexplode("qv").alias("pos", "val")
+        ).groupBy(*keys, "cluster", "pos").agg(
+            F.sum("val").alias("s"), F.count("*").alias("n")
+        )
+        return (
+            per_dim.select(
+                *keys, "cluster", "pos",
+                _tdiv(F.col("s"), F.col("n")).alias("m"),
+            )
+            .groupBy(*keys, "cluster")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda x: x["m"],
+                ).alias("cv")
+            )
+        )
+
+    return iterate(_round, centroids, iterations)[0]
+
+
 def kmeans_fit(
     vecs: DataFrame,
     k: int = 8,
@@ -125,42 +168,14 @@ def kmeans_fit(
     qv)``, final centroids ``(cluster, cv)``) — deterministically
     seeded with the vectors whose ``id_col`` < k (ids are dense in the
     synthetic corpus; production use passes any k chosen rows).
-    Centroids are localCheckpoint-ed per round so the iterative plan
-    stays flat; callers needing the codebook itself (PQ lookup tables,
+    ``spark_util.iterate`` truncates the centroids per round so the
+    iterative plan stays flat; callers needing the codebook itself (PQ lookup tables,
     IVF cell routing) take the second element."""
     q = vecs.select(
         F.col(id_col).cast("long").alias("vec_id"),
         quantize(F.col(vec_col), dims).alias("qv"),
     ).localCheckpoint(eager=True)
-
-    centroids = (
-        q.filter(F.col("vec_id") < k)
-        .select(F.col("vec_id").cast("int").alias("cluster"), F.col("qv").alias("cv"))
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(iterations):
-        assigned = _assign(q, centroids, k).join(q, "vec_id")
-        per_dim = assigned.select(
-            "cluster", F.posexplode("qv").alias("pos", "val")
-        ).groupBy("cluster", "pos").agg(
-            F.sum("val").alias("s"), F.count("*").alias("n")
-        )
-        centroids = (
-            per_dim.select(
-                "cluster", "pos", _tdiv(F.col("s"), F.col("n")).alias("m")
-            )
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x["m"],
-                ).alias("cv")
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return q, centroids
+    return q, _lloyd(q, k, iterations)
 
 
 def kmeans_assign(
@@ -385,42 +400,7 @@ def pq_fit(
             ])
         ).alias("s"),
     ).select("vec_id", "s.subspace", "s.qv").localCheckpoint(eager=True)
-
-    centroids = (
-        q.filter(F.col("vec_id") < k)
-        .select(
-            "subspace",
-            F.col("vec_id").cast("int").alias("cluster"),
-            F.col("qv").alias("cv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(iterations):
-        assigned = _assign(q, centroids, k, keys=("subspace",)).join(
-            q, ["vec_id", "subspace"]
-        )
-        per_dim = assigned.select(
-            "subspace", "cluster", F.posexplode("qv").alias("pos", "val")
-        ).groupBy("subspace", "cluster", "pos").agg(
-            F.sum("val").alias("s"), F.count("*").alias("n")
-        )
-        centroids = (
-            per_dim.select(
-                "subspace", "cluster", "pos",
-                _tdiv(F.col("s"), F.col("n")).alias("m"),
-            )
-            .groupBy("subspace", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda x: x["m"],
-                ).alias("cv")
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return q, centroids
+    return q, _lloyd(q, k, iterations, keys=("subspace",))
 
 
 def pq_encode(

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spark_util import iterate
+
 # Patterns restricted to constructs Java regex and RE2 engines treat
 # identically (no backrefs, no lookaround) so DuckDB oracles can replay
 # them verbatim.
@@ -1021,8 +1023,8 @@ def bradley_terry(
     partial sum keyed by item, and the update is a |items|-row join.
     A celebrity item (compared against everything) skews the endpoint
     join → AQE skew split applies; the vote volume itself was already
-    absorbed in the one-time pair aggregation. Weights are
-    ``localCheckpoint``-ed per round (|items| rows) so the plan stays
+    absorbed in the one-time pair aggregation. ``spark_util.iterate``
+    truncates the weights (|items| rows) per round so the plan stays
     flat across rounds.
     """
     if rounds < 1:
@@ -1065,7 +1067,8 @@ def bradley_terry(
     weights = items.select(
         "item_id", F.lit(scale).cast("long").alias("w")
     )
-    for _ in range(rounds):
+
+    def _update(weights, _r):
         wu = weights.select(
             F.col("item_id").alias("u"), F.col("w").alias("wu")
         )
@@ -1088,7 +1091,7 @@ def bradley_terry(
             .groupBy("item_id")
             .agg(F.sum("t").alias("den"))
         )
-        weights = (
+        return (
             items.join(den, "item_id")
             .join(weights, "item_id")
             .select(
@@ -1101,8 +1104,9 @@ def bradley_terry(
                 .cast("long")
                 .alias("w"),
             )
-            .localCheckpoint(eager=False)
         )
+
+    weights = iterate(_update, weights, rounds)[0]
     return items.join(weights, "item_id").select(
         "item_id", "wins", "games", F.col("w").alias("strength_mu")
     )

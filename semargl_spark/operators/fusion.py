@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..spark_util import iterate
+
 OWL_SAME_AS = "http://www.w3.org/2002/07/owl#sameAs"
 
 _TRIPLE = ("subj", "pred", "obj")
@@ -298,8 +300,9 @@ def truth_discovery(
 
     Each round's weight table is one row per source — collected
     nowhere, but broadcast-joined against the assertion set, so the
-    corpus-sized side never shuffles. localCheckpoint truncates the
-    per-round lineage (two consumers read each round's winners).
+    corpus-sized side never shuffles. ``spark_util.iterate`` truncates
+    the per-round lineage (two consumers read each round's winners:
+    the next round's reweighting and the result).
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -308,26 +311,16 @@ def truth_discovery(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    weights = a.select("source").distinct().withColumn(
-        "w", F.lit(1).cast("long")
-    )
     win = Window.partitionBy("subj", "pred").orderBy(
         F.col("score").desc(), F.col("obj").asc()
     )
-    winners = None
-    for r in range(rounds):
-        scored = (
-            a.join(F.broadcast(weights), "source")
-            .groupBy("subj", "pred", "obj")
-            .agg(F.sum("w").alias("score"))
-        )
-        winners = (
-            scored.withColumn("rn", F.row_number().over(win))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-            .localCheckpoint(eager=False)
-        )
-        if r + 1 < rounds:
+
+    def _vote(winners, _r):
+        if winners is None:
+            weights = a.select("source").distinct().withColumn(
+                "w", F.lit(1).cast("long")
+            )
+        else:
             agree = (
                 a.join(winners.select("subj", "pred", "obj"),
                        ["subj", "pred", "obj"])
@@ -344,4 +337,16 @@ def truth_discovery(
                     .alias("w"),
                 )
             )
+        scored = (
+            a.join(F.broadcast(weights), "source")
+            .groupBy("subj", "pred", "obj")
+            .agg(F.sum("w").alias("score"))
+        )
+        return (
+            scored.withColumn("rn", F.row_number().over(win))
+            .filter(F.col("rn") == 1)
+            .drop("rn")
+        )
+
+    winners = iterate(_vote, None, rounds)[0]
     return winners.select("subj", "pred", "obj", "score")

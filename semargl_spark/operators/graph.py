@@ -15,7 +15,8 @@ Scale shape (10^12-edge KG):
 * dangling mass (nodes with no out-edges) is a one-row aggregate
   crossJoined back in — Spark plans that as a broadcast of a single
   row, never a driver collect;
-* ``localCheckpoint`` per iteration truncates lineage, same pattern as
+* every round loop runs on ``spark_util.iterate``, which truncates
+  lineage per round and owns the stop test, the same helper as
   operators/canon.py connected components.
 
 Reference parity: the reference is a parser framework with no graph
@@ -24,8 +25,12 @@ analytics; this is target-side surface for the constructed KG.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..spark_util import iterate
 
 SCALE = 10**12
 
@@ -58,17 +63,12 @@ def bounded_paths(
     yields L^2/2 pairs); the bounded form caps the output at
     max_hops·|E| and is what SPARQL engines actually execute for
     ``p{1,k}``. Each round is one shuffle join on the frontier's dst +
-    one anti-join on (a, b); ``localCheckpoint`` truncates the growing
-    plan exactly as :func:`pagerank` does.
+    one anti-join on (a, b) (:func:`_closure_round`, shared with
+    :func:`kleene_closure`).
     """
-    e = (
-        edges.filter(F.col(pred_col) == pred)
-        .select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+    return bounded_paths_alt(
+        edges, [pred], max_hops, None, src_col, dst_col, pred_col
     )
-    return _bounded_closure(e, max_hops)
 
 
 def bounded_paths_alt(
@@ -90,49 +90,72 @@ def bounded_paths_alt(
     path from doubling the join rounds."""
     if not preds and not inverse_preds:
         raise ValueError("at least one forward or inverse predicate required")
-    parts = []
-    if preds:
-        parts.append(
-            edges.filter(F.col(pred_col).isin(*preds)).select(
-                F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-            )
+    e = _step_relation(
+        edges, preds, inverse_preds, src_col, dst_col, pred_col
+    )
+    return _bounded_closure(e, max_hops)
+
+
+def _step_relation(
+    edges: DataFrame,
+    preds: list[str],
+    inverse_preds: list[str] | None,
+    src_col: str,
+    dst_col: str,
+    pred_col: str,
+) -> DataFrame:
+    """One-step (a, b) relation of a property path: the forward
+    ``preds`` plus the REVERSED ``inverse_preds``, deduplicated and
+    checkpointed once."""
+    parts = [
+        edges.filter(F.col(pred_col).isin(*ps)).select(
+            F.col(a).alias("a"), F.col(b).alias("b")
         )
-    if inverse_preds:
-        parts.append(
-            edges.filter(F.col(pred_col).isin(*inverse_preds)).select(
-                F.col(dst_col).alias("a"), F.col(src_col).alias("b")
-            )
-        )
-    e = parts[0]
-    for p in parts[1:]:
-        e = e.unionByName(p)
-    e = (
-        e.filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+        for ps, a, b in ((preds, src_col, dst_col),
+                         (inverse_preds, dst_col, src_col))
+        if ps
+    ]
+    return (
+        reduce(DataFrame.unionByName, parts)
+        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)
     )
-    return _bounded_closure(e, max_hops)
+
+
+def _closure_round(e: DataFrame):
+    """Semi-naive round over a step relation ``e(a, b)``, shared by
+    :func:`_bounded_closure` and :func:`kleene_closure`. State is
+    ``(frontier, seen)``: last round's new pairs and every pair before
+    them. A round folds the frontier into ``seen``, extends only the
+    frontier one step and anti-joins that against ``seen`` (setting
+    ``hops`` to r+1 when the frontier carries it)."""
+
+    def step(state, r):
+        frontier, seen = state
+        seen = seen.unionByName(frontier)
+        new = (
+            frontier.select("a", F.col("b").alias("mid"))
+            .join(e.select(F.col("a").alias("mid"), "b"), "mid")
+            .select("a", "b")
+            .distinct()
+            .join(seen.select("a", "b"), ["a", "b"], "left_anti")
+        )
+        if "hops" in frontier.columns:
+            new = new.withColumn("hops", F.lit(r + 1).cast("int"))
+        return new, seen
+
+    return step
 
 
 def _bounded_closure(e: DataFrame, max_hops: int) -> DataFrame:
     """Semi-naive minimum-hop closure over a prepared (a, b) step
     relation — shared by :func:`bounded_paths` / :func:`bounded_paths_alt`."""
-    seen = e.select("a", "b", F.lit(1).cast("int").alias("hops"))
-    frontier = seen
-    for hop in range(2, max_hops + 1):
-        ext = (
-            frontier.select("a", F.col("b").alias("mid"))
-            .join(e.select(F.col("a").alias("mid"), "b"), "mid")
-            .select("a", "b")
-            .distinct()
-        )
-        frontier = (
-            ext.join(seen.select("a", "b"), ["a", "b"], "left_anti")
-            .select("a", "b", F.lit(hop).cast("int").alias("hops"))
-            .localCheckpoint(eager=False)
-        )
-        seen = seen.unionByName(frontier).localCheckpoint(eager=False)
-    return seen
+    first = e.select("a", "b", F.lit(1).cast("int").alias("hops"))
+    (frontier, seen), _ = iterate(
+        _closure_round(e), (first, first.limit(0)), max_hops - 1
+    )
+    return seen.unionByName(frontier)
 
 
 def kleene_closure(
@@ -158,11 +181,10 @@ def kleene_closure(
 
     Semi-naive BFS: the per-round frontier holds only pairs never seen
     before (anti-join), so round count = graph diameter, not path
-    count. The frontier is checkpointed EAGERLY each round because two
-    consumers read it (the emptiness probe and the next extension
-    join) — lazy lineage would re-run the join per consumer. The
-    emptiness probe is ``isEmpty`` (a LIMIT-1 action, O(1) driver
-    memory, same discipline as canon.py's convergence fingerprint).
+    count. The round is :func:`_closure_round`, shared with
+    :func:`bounded_paths`; ``spark_util.iterate`` checkpoints the
+    frontier eagerly (the emptiness probe and the next extension join
+    both read it) and stops on the first empty one.
 
     Scale honesty: run this only where the closure itself is bounded —
     a seed-restricted query (pass ``sources``: one column of start
@@ -174,13 +196,7 @@ def kleene_closure(
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    e = (
-        edges.filter(F.col(pred_col) == pred)
-        .select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _step_relation(edges, [pred], None, src_col, dst_col, pred_col)
     seeds = None
     if sources is not None:
         seed_col = sources.columns[0]
@@ -204,20 +220,12 @@ def kleene_closure(
         )
         return closure.unionByName(ident).distinct()
 
-    frontier = seen
-    for _ in range(max_rounds):
-        ext = (
-            frontier.select("a", F.col("b").alias("mid"))
-            .join(e.select(F.col("a").alias("mid"), "b"), "mid")
-            .select("a", "b")
-            .distinct()
-        )
-        frontier = ext.join(
-            seen.select("a", "b"), ["a", "b"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            return _finish(seen)
-        seen = seen.unionByName(frontier).localCheckpoint(eager=False)
+    (_, seen), converged = iterate(
+        _closure_round(e), (seen, seen.limit(0)), max_rounds,
+        until=lambda s: s[0],
+    )
+    if converged:
+        return _finish(seen)
     raise RuntimeError(
         f"kleene_closure did not converge within {max_rounds} rounds — "
         "the predicate subgraph has a longer diameter than expected; "
@@ -345,8 +353,8 @@ def wl_colors(
     messages — bounded by degree, the same hub caveat as
     adjacency_export (a 10^9-degree celebrity makes a long row; cap or
     sample upstream if that exists). ``colors`` is consumed three times
-    per round, so it is localCheckpoint-ed each round — lineage stays
-    O(1) deep and nothing recomputes per consumer.
+    per round; ``spark_util.iterate`` checkpoints it each round, so
+    lineage stays O(1) deep and nothing recomputes per consumer.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
@@ -369,10 +377,8 @@ def wl_colors(
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    colors = nodes.select("node", F.lit("0").alias("color")).localCheckpoint(
-        eager=False
-    )
-    for _ in range(rounds):
+
+    def _refine(colors, _r):
         c_dst = colors.select(F.col("node").alias("dst"), F.col("color").alias("c"))
         m_out = e.join(c_dst, "dst").select(
             F.col("src").alias("node"),
@@ -390,21 +396,21 @@ def wl_colors(
                 F.array_join(F.sort_array(F.collect_list("msg")), "#").alias("sig")
             )
         )
-        colors = (
-            colors.join(sigs, "node", "left")
-            .select(
-                "node",
-                F.md5(
-                    F.concat(
-                        F.col("color"),
-                        F.lit("|"),
-                        F.coalesce(F.col("sig"), F.lit("")),
-                    )
-                ).alias("color"),
-            )
-            .localCheckpoint(eager=False)
+        return colors.join(sigs, "node", "left").select(
+            "node",
+            F.md5(
+                F.concat(
+                    F.col("color"),
+                    F.lit("|"),
+                    F.coalesce(F.col("sig"), F.lit("")),
+                )
+            ).alias("color"),
         )
-    return colors
+
+    colors = nodes.select("node", F.lit("0").alias("color")).localCheckpoint(
+        eager=False
+    )
+    return iterate(_refine, colors, rounds)[0]
 
 
 def triangle_counts(
@@ -548,6 +554,92 @@ def node_jaccard(
     return out.filter(F.col("jaccard_permille") >= min_permille)
 
 
+def _edges_and_nodes(edges: DataFrame, src_col: str, dst_col: str):
+    """(edge list, node list) of a directed edge set, both
+    deduplicated and checkpointed once."""
+    e = (
+        edges.select(
+            F.col(src_col).cast("string").alias("src"),
+            F.col(dst_col).cast("string").alias("dst"),
+        )
+        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    return e, nodes
+
+
+def _rank_rounds(
+    e: DataFrame,
+    nodes: DataFrame,
+    n_teleport: int,
+    iterations: int,
+    damping_pct: int,
+    is_seed: Column | None = None,
+) -> DataFrame:
+    """The fixed-point power iteration shared by :func:`pagerank` and
+    :func:`personalized_pagerank`. Teleport, initial mass and dangling
+    mass go to ``n_teleport`` nodes: every node when ``is_seed`` is
+    None (a constant, no per-node predicate), else the nodes matching
+    ``is_seed``."""
+
+    def teleport(c: Column) -> Column:
+        return c if is_seed is None else F.when(is_seed, c).otherwise(F.lit(0))
+
+    outdeg = e.groupBy(F.col("src").alias("node")).agg(
+        F.count("*").alias("outdeg")
+    )
+    base = (SCALE * (100 - damping_pct) // 100) // n_teleport
+
+    def _round(ranks, _r):
+        r = ranks.join(outdeg, "node", "left")
+        # one-row dangling aggregate; crossJoin broadcasts it
+        dangling = r.filter(F.col("outdeg").isNull()).agg(
+            F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling_fp")
+        )
+        shares = r.filter(F.col("outdeg").isNotNull()).select(
+            "node", _fdiv(F.col("rank_fp"), F.col("outdeg")).alias("share")
+        )
+        contribs = (
+            e.join(shares.withColumnRenamed("node", "src"), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("share").cast("long").alias("contrib"))
+        )
+        return (
+            nodes.join(contribs, "node", "left")
+            .crossJoin(dangling)
+            .select(
+                "node",
+                (
+                    teleport(F.lit(base))
+                    + _fdiv(
+                        F.lit(damping_pct)
+                        * (
+                            F.coalesce(F.col("contrib"), F.lit(0))
+                            + teleport(
+                                _fdiv(F.col("dangling_fp"), F.lit(n_teleport))
+                            )
+                        ),
+                        F.lit(100),
+                    )
+                )
+                .cast("long")
+                .alias("rank_fp"),
+            )
+        )
+
+    ranks = nodes.select(
+        "node", teleport(F.lit(SCALE // n_teleport)).cast("long").alias("rank_fp")
+    )
+    return iterate(_round, ranks, iterations)[0]
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
@@ -566,64 +658,9 @@ def pagerank(
                  + floor(damping% · (Σ_{u→v} floor(rank(u)/outdeg(u))
                                      + floor(dangling/N)) / 100)
     """
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _edges_and_nodes(edges, src_col, dst_col)
     n = nodes.count()  # one scalar the driver legitimately needs
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("outdeg")
-    )
-    base = (SCALE * (100 - damping_pct) // 100) // n
-    ranks = nodes.select("node", F.lit(SCALE // n).cast("long").alias("rank_fp"))
-
-    for _ in range(iterations):
-        r = ranks.join(outdeg, "node", "left")
-        # one-row dangling aggregate; crossJoin broadcasts it
-        dangling = r.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling_fp")
-        )
-        shares = r.filter(F.col("outdeg").isNotNull()).select(
-            "node", _fdiv(F.col("rank_fp"), F.col("outdeg")).alias("share")
-        )
-        contribs = (
-            e.join(shares.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").cast("long").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + _fdiv(
-                        F.lit(damping_pct)
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0))
-                            + _fdiv(F.col("dangling_fp"), F.lit(n))
-                        ),
-                        F.lit(100),
-                    )
-                )
-                .cast("long")
-                .alias("rank_fp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return _rank_rounds(e, nodes, n, iterations, damping_pct)
 
 
 def node_index(edges: DataFrame, n_buckets: int = 64,
@@ -753,7 +790,7 @@ def label_propagation(
     partial — and one per-node argmax window. The window partitions by
     node (10^9 independent tiny partitions), NOT a global sort. Hub
     skew lands in the count groupBy, where AQE's skew-split applies;
-    ``localCheckpoint`` truncates lineage per round as in
+    ``spark_util.iterate`` truncates lineage per round as in
     :func:`pagerank`. Fixed rounds (not convergence) keeps the job a
     static DAG — LPA oscillates on bipartite structures, so production
     runs cap rounds anyway.
@@ -775,7 +812,8 @@ def label_propagation(
     nodes = und.select(F.col("u").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("label").asc())
-    for _ in range(rounds):
+
+    def _adopt(labels, _r):
         neigh = (
             und.join(labels.withColumnRenamed("node", "v"), "v")
             .select(F.col("u").alias("node"), "label")
@@ -787,15 +825,11 @@ def label_propagation(
             .filter(F.col("rn") == 1)
             .select("node", "label")
         )
-        labels = (
-            nodes.join(picked, "node", "left")
-            .select(
-                "node",
-                F.coalesce("label", F.col("node")).alias("label"),
-            )
-            .localCheckpoint(eager=False)
+        return nodes.join(picked, "node", "left").select(
+            "node", F.coalesce("label", F.col("node")).alias("label")
         )
-    return labels
+
+    return iterate(_adopt, labels, rounds)[0]
 
 
 def neighbor_agg(
@@ -972,8 +1006,9 @@ def personalized_pagerank(
     (node, rank_fp). The similarity-to-seed-set measure behind
     related-entity panels and seed-expansion labeling over the KG.
 
-    Same fixed-point integer machinery as :func:`pagerank` (bit-exact
-    at any parallelism, oracle-checkable) with three deltas: initial
+    The same fixed-point integer rounds as :func:`pagerank`
+    (:func:`_rank_rounds`: bit-exact at any parallelism,
+    oracle-checkable) with three deltas: initial
     mass SCALE/|S| on each seed, the (100−d)% teleport paid only to
     seeds, and dangling mass returned to the seeds instead of spread
     uniformly. The seed set is a literal isin predicate — seeds are by
@@ -982,70 +1017,12 @@ def personalized_pagerank(
     """
     if not seeds:
         raise ValueError("empty seed set")
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+    e, nodes = _edges_and_nodes(edges, src_col, dst_col)
+    seed_set = sorted(set(seeds))
+    return _rank_rounds(
+        e, nodes, len(seed_set), iterations, damping_pct,
+        is_seed=F.col("node").isin(*seed_set),
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    outdeg = e.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").alias("outdeg")
-    )
-    ns = len(set(seeds))
-    is_seed = F.col("node").isin(*sorted(set(seeds)))
-    base = (SCALE * (100 - damping_pct) // 100) // ns
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(SCALE // ns)).otherwise(F.lit(0))
-        .cast("long").alias("rank_fp"),
-    )
-    for _ in range(iterations):
-        r = ranks.join(outdeg, "node", "left")
-        dangling = r.filter(F.col("outdeg").isNull()).agg(
-            F.coalesce(F.sum("rank_fp"), F.lit(0)).cast("long").alias("dangling_fp")
-        )
-        shares = r.filter(F.col("outdeg").isNotNull()).select(
-            "node", _fdiv(F.col("rank_fp"), F.col("outdeg")).alias("share")
-        )
-        contribs = (
-            e.join(shares.withColumnRenamed("node", "src"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("share").cast("long").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                    + _fdiv(
-                        F.lit(damping_pct)
-                        * (
-                            F.coalesce(F.col("contrib"), F.lit(0))
-                            + F.when(
-                                is_seed,
-                                _fdiv(F.col("dangling_fp"), F.lit(ns)),
-                            ).otherwise(F.lit(0))
-                        ),
-                        F.lit(100),
-                    )
-                )
-                .cast("long")
-                .alias("rank_fp"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
 
 
 def random_walks(
@@ -1090,10 +1067,14 @@ def random_walks(
         ).alias("walk"),
     )
     frontier = walks.select("start", "walk", F.col("start").alias("node"))
-    out = frontier.select(
-        "start", "walk", F.lit(0).alias("step"), "node"
-    )
-    for s in range(1, walk_len + 1):
+
+    # state (frontier, earlier frontiers): each frontier feeds BOTH the
+    # output union and the next hop's join, so it must be the
+    # checkpointed one iterate hands back — otherwise the union's branch
+    # s re-derives hops 1..s, turning walk_len joins into walk_len² (at
+    # 10^12 turns that is the whole job)
+    def _hop(state, s):
+        frontier, levels = state
         tagged = (
             frontier.join(e, frontier["node"] == e["_s"])
             .select(
@@ -1109,19 +1090,22 @@ def random_walks(
                 ).alias("h"),
             )
         )
-        frontier = (
-            tagged.groupBy("start", "walk")
-            .agg(F.substring(F.min("h"), 17, 1 << 20).alias("node"))
-            # each frontier feeds BOTH the output union and the next
-            # hop's join; without the (lazy) checkpoint the union's
-            # branch s re-derives hops 1..s, turning walk_len joins
-            # into walk_len² — at 10^12 turns that is the whole job
-            .localCheckpoint(eager=False)
+        nxt = tagged.groupBy("start", "walk").agg(
+            F.substring(F.min("h"), 17, 1 << 20).alias("node")
         )
-        out = out.union(
-            frontier.select("start", "walk", F.lit(s).alias("step"), "node")
-        )
-    return out
+        return nxt, levels + (frontier,)
+
+    (last, levels), _ = iterate(_hop, (frontier, ()), walk_len)
+    return _walk_rows(levels + (last,))
+
+
+def _walk_rows(levels: tuple) -> DataFrame:
+    """Flat ``(start, walk, step, node)`` rows from per-step frontiers
+    (``levels[s]`` holds every walk's node at step s)."""
+    return reduce(DataFrame.union, (
+        level.select("start", "walk", F.lit(s).alias("step"), "node")
+        for s, level in enumerate(levels)
+    ))
 
 
 def skipgram_pairs(
@@ -1195,15 +1179,7 @@ def hits(
 
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, nodes = _edges_and_nodes(edges, src_col, dst_col)
     max_deg = (
         e.select(F.col("src").alias("n"))
         .unionByName(e.select(F.col("dst").alias("n")))
@@ -1219,15 +1195,9 @@ def hits(
             f"D^(2*iterations) >= 2^62); lower iterations or normalize "
             f"externally"
         )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
-    auth = None
-    for _ in range(iterations):
+
+    def _reinforce(state, _r):
+        _, hub = state
         auth = (
             e.join(hub.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
@@ -1238,10 +1208,10 @@ def hits(
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("auth").cast("long").alias("hub"))
         )
-        # two consumers read each score column (the next half-round and
-        # the final assembly); truncate lineage per round like pagerank
-        auth = auth.localCheckpoint(eager=False)
-        hub = hub.localCheckpoint(eager=False)
+        return auth, hub
+
+    hub = nodes.select("node", F.lit(1).cast("long").alias("hub"))
+    (auth, hub), _ = iterate(_reinforce, (None, hub), iterations)
     return (
         nodes.join(auth, "node", "left")
         .join(hub, "node", "left")
@@ -1283,37 +1253,23 @@ def kcore(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    und = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .filter(
-            F.col("a").isNotNull() & F.col("b").isNotNull()
-            & (F.col("a") != F.col("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(rounds):
-        deg = (
+    und = _simple_pairs(edges, src_col, dst_col).localCheckpoint(eager=True)
+
+    def degrees(und: DataFrame) -> DataFrame:
+        return (
             und.select(F.col("a").alias("node"))
             .unionByName(und.select(F.col("b").alias("node")))
             .groupBy("node")
             .agg(F.count("*").cast("long").alias("degree"))
         )
-        keep = deg.filter(F.col("degree") >= k).select("node")
-        und = (
-            und.join(keep.withColumnRenamed("node", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-    return (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("degree"))
-    )
+
+    def _peel(und, _r):
+        keep = degrees(und).filter(F.col("degree") >= k).select("node")
+        return und.join(
+            keep.withColumnRenamed("node", "a"), "a", "left_semi"
+        ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
+
+    return degrees(iterate(_peel, und, rounds)[0])
 
 
 def comention_edges(
@@ -1438,14 +1394,16 @@ def list_rank(rest: DataFrame, max_iter: int = 16) -> DataFrame:
     from the head side). Heads (cells that are no rest-target) self-
     loop with d = 0, so jumps through a head are absorbing; each round
     squares the pointer reach (ptr ← ptr's ptr, d ← d + ptr's d) in one
-    node-sized self-join, and convergence (all pointers at heads) is a
-    single-row fingerprint per round, O(1) driver memory, like
-    operators/canon.py. A malformed cell with several predecessors
+    node-sized self-join. Convergence (all pointers at heads) is
+    ``spark_util.iterate``'s emptiness probe on the cells whose pointer
+    moved in the last round (``hop``, the distance of that jump, is
+    non-zero) — the same stop test as every other round loop. A
+    malformed cell with several predecessors
     takes the minimum (deterministic); a cyclic chain never converges
     and raises instead of returning wrong positions.
 
-    Scale shape: state is 3 columns × #cells; rounds shuffle on the
-    pointer id only; localCheckpoint per round keeps the plan flat.
+    Scale shape: state is 4 columns × #cells; rounds shuffle on the
+    pointer id only.
     """
     prev = (
         rest.select(F.col("nxt").alias("cell"), F.col("cell").alias("prv"))
@@ -1457,6 +1415,7 @@ def list_rank(rest: DataFrame, max_iter: int = 16) -> DataFrame:
         .union(rest.select(F.col("nxt").alias("cell")))
         .distinct()
     )
+    # the initial pointer is a jump of d from the cell itself
     state = (
         cells.join(prev, "cell", "left")
         .select(
@@ -1467,37 +1426,30 @@ def list_rank(rest: DataFrame, max_iter: int = 16) -> DataFrame:
             .cast("long")
             .alias("d"),
         )
-        .localCheckpoint(eager=False)
+        .withColumn("hop", F.col("d"))
+        .localCheckpoint(eager=True)
     )
 
-    def _fp(df: DataFrame) -> int:
-        row = df.agg(
-            F.coalesce(F.sum(F.hash("cell", "ptr", "d")), F.lit(0)).alias("h")
-        ).collect()[0]
-        return int(row["h"])
-
-    prev_fp = _fp(state)
-    for _round in range(max_iter):
+    def _jump(state, _r):
         j = state.select(
             F.col("cell").alias("jcell"),
             F.col("ptr").alias("jptr"),
             F.col("d").alias("jd"),
         )
-        state = (
-            state.join(j, state.ptr == j.jcell)
-            .select(
-                "cell",
-                F.col("jptr").alias("ptr"),
-                (F.col("d") + F.col("jd")).alias("d"),
-            )
-            .localCheckpoint(eager=False)
+        return state.join(j, state.ptr == j.jcell).select(
+            "cell",
+            F.col("jptr").alias("ptr"),
+            (F.col("d") + F.col("jd")).alias("d"),
+            F.col("jd").alias("hop"),
         )
-        cur = _fp(state)
-        if cur == prev_fp:
-            return state.select(
-                "cell", F.col("ptr").alias("head"), F.col("d").alias("pos")
-            )
-        prev_fp = cur
+
+    state, converged = iterate(
+        _jump, state, max_iter, until=lambda s: s.filter(F.col("hop") != 0)
+    )
+    if converged:
+        return state.select(
+            "cell", F.col("ptr").alias("head"), F.col("d").alias("pos")
+        )
     raise RuntimeError(
         f"list_rank did not converge in {max_iter} rounds (covers chains "
         f"to length ~2^{max_iter}); a cyclic rest-chain or longer lists — "
@@ -1547,8 +1499,9 @@ def temporal_reachability(
 
     Scale shape: each hop is one equi-join of the current frontier
     against the edge table (shuffled on node id, AQE splits hub skew)
-    plus one min-groupBy; ``localCheckpoint`` per level keeps the plan
-    flat; frontiers are seed-limited, never all-pairs.
+    plus one min-groupBy, one level per ``spark_util.iterate`` round,
+    which stops at the first empty level; frontiers are seed-limited,
+    never all-pairs.
     """
     if max_hops < 1:
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
@@ -1574,9 +1527,10 @@ def temporal_reachability(
         F.lit(0).cast("long").alias("arr"),
         F.lit(0).cast("int").alias("hops"),
     ).localCheckpoint(eager=True)
-    walks = frontier
-    for r in range(1, max_hops + 1):
-        frontier = (
+
+    def _level(state, r):
+        frontier, walks = state
+        nxt = (
             frontier.join(e, frontier.node == e.esrc)
             .filter(F.col("ets") >= F.col("arr"))
             .groupBy("origin", F.col("edst").alias("node"))
@@ -1584,11 +1538,14 @@ def temporal_reachability(
             .select(
                 "origin", "node", "arr", F.lit(r).cast("int").alias("hops")
             )
-            .localCheckpoint(eager=True)
         )
-        if frontier.isEmpty():
-            break
-        walks = walks.unionByName(frontier).localCheckpoint(eager=False)
+        return nxt, walks.unionByName(frontier)
+
+    (frontier, walks), _ = iterate(
+        _level, (frontier, frontier.limit(0)), max_hops,
+        until=lambda s: s[0],
+    )
+    walks = walks.unionByName(frontier)
     return walks.groupBy("origin", "node").agg(
         F.min("arr").alias("min_arr"),
         F.min("hops").cast("int").alias("min_hops"),
@@ -1693,9 +1650,19 @@ def weighted_paths(
         start = e.join(
             sources.select(F.col("node").alias("a")).distinct(), "a"
         )
-    best = start.select("a", "b", F.col("w").alias("min_cost"))
-    frontier = best
-    for _hop in range(2, max_hops + 1):
+
+    def merge(best: DataFrame, frontier: DataFrame) -> DataFrame:
+        return (
+            best.unionByName(frontier)
+            .groupBy("a", "b")
+            .agg(F.min("min_cost").alias("min_cost"))
+        )
+
+    # state (frontier, best): the last round's improvements and the best
+    # costs known before them
+    def _relax(state, _r):
+        frontier, best = state
+        best = merge(best, frontier)
         ext = (
             frontier.select("a", F.col("b").alias("mid"), "min_cost")
             .join(e.select(F.col("a").alias("mid"), "b", "w"), "mid")
@@ -1709,18 +1676,14 @@ def weighted_paths(
                      ["a", "b"], "left")
             .filter(F.col("old").isNull() | (F.col("cost") < F.col("old")))
             .select("a", "b", F.col("cost").alias("min_cost"))
-            .localCheckpoint(eager=True)
         )
-        if improved.isEmpty():
-            break
-        best = (
-            best.unionByName(improved)
-            .groupBy("a", "b")
-            .agg(F.min("min_cost").alias("min_cost"))
-            .localCheckpoint(eager=False)
-        )
-        frontier = improved
-    return best
+        return improved, best
+
+    first = start.select("a", "b", F.col("w").alias("min_cost"))
+    (frontier, best), converged = iterate(
+        _relax, (first, first.limit(0)), max_hops - 1, until=lambda s: s[0]
+    )
+    return best if converged else merge(best, frontier)
 
 
 def harmonic_closeness(
@@ -1887,11 +1850,11 @@ def node2vec_walks(
         F.lit(None).cast("string").alias("prev"),
         F.col("start").alias("node"),
     )
-    out = frontier.select(
-        "start", "walk", F.lit(0).alias("step"), "node"
-    )
     mark_side = F.broadcast(mark) if broadcast_membership else mark
-    for s in range(1, walk_len + 1):
+
+    # same state shape as random_walks: (frontier, earlier frontiers)
+    def _hop(state, s):
+        frontier, levels = state
         cand = frontier.join(e, frontier["node"] == e["_s"]).join(
             mark_side,
             (F.col("prev") == F.col("_ps"))
@@ -1918,7 +1881,7 @@ def node2vec_walks(
                 F.lit("#"), F.col("_d"),
             ).alias("key"),
         )
-        frontier = (
+        nxt = (
             tagged.groupBy("start", "walk", "node")
             .agg(F.substring(F.min("key"), 22, 1 << 20).alias("_next"))
             .select(
@@ -1926,16 +1889,11 @@ def node2vec_walks(
                 F.col("node").alias("prev"),
                 F.col("_next").alias("node"),
             )
-            # same lineage discipline as random_walks: each frontier
-            # feeds the output union AND the next hop
-            .localCheckpoint(eager=False)
         )
-        out = out.union(
-            frontier.select(
-                "start", "walk", F.lit(s).alias("step"), "node"
-            )
-        )
-    return out
+        return nxt, levels + (frontier,)
+
+    (last, levels), _ = iterate(_hop, (frontier, ()), walk_len)
+    return _walk_rows(levels + (last,))
 
 
 def ranking_metrics(
@@ -2124,8 +2082,8 @@ def seeded_label_propagation(
     (node, label) count aggregation with map-side partials, one
     per-node argmin over a ``(-count, label)`` struct (resolves
     plurality + tie in ONE min, no window), one anti-join against the
-    assigned set. Labeled state is (node, label) pairs,
-    localCheckpoint-ed per round; a hub's fan-in collapses in the
+    assigned set. Labeled state is (node, label) pairs, truncated per
+    round by ``spark_util.iterate``; a hub's fan-in collapses in the
     count aggregation.
     """
     if rounds < 1:
@@ -2152,7 +2110,8 @@ def seeded_label_propagation(
         .withColumn("round", F.lit(0))
         .localCheckpoint(eager=False)
     )
-    for r in range(1, rounds + 1):
+
+    def _spread(assigned, r):
         msgs = und.join(
             assigned.select(F.col("node").alias("b"), "label"), "b"
         ).select(F.col("a").alias("node"), "label")
@@ -2174,10 +2133,9 @@ def seeded_label_propagation(
         newly = pick.join(
             assigned.select("node"), "node", "left_anti"
         ).withColumn("round", F.lit(r))
-        assigned = assigned.unionByName(newly).localCheckpoint(
-            eager=False
-        )
-    return assigned
+        return assigned.unionByName(newly)
+
+    return iterate(_spread, assigned, rounds)[0]
 
 
 def ktruss(
@@ -2205,9 +2163,9 @@ def ktruss(
     Shape, per round: the degree-ordered triangle enumeration of
     :func:`triangle_counts` (hub-safe wedge join) on the CURRENT edge
     set, one explode to the 3 member edges, one (a, b) support count,
-    one left-join + filter. The edge list shrinks monotonically and is
-    checkpointed per round, so round count bounds job depth and later
-    rounds run on ever-smaller graphs.
+    one left-join + filter. The edge list shrinks monotonically and
+    ``spark_util.iterate`` checkpoints it per round, so round count
+    bounds job depth and later rounds run on ever-smaller graphs.
     """
     if k < 3:
         raise ValueError(f"k must be >= 3 for a k-truss, got {k}")
@@ -2241,14 +2199,14 @@ def ktruss(
             F.count("*").cast("long").alias("support")
         )
 
-    for _ in range(rounds):
-        sup = support(und)
-        und = (
-            und.join(sup, ["a", "b"], "left")
+    def _peel(und, _r):
+        return (
+            und.join(support(und), ["a", "b"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("a", "b")
-            .localCheckpoint(eager=False)
         )
+
+    und = iterate(_peel, und, rounds)[0]
     return und.join(support(und), ["a", "b"], "left").select(
         "a",
         "b",

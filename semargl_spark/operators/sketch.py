@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..spark_util import iterate
+
 # 52-bit hash space: (k-1) * 2^52 stays far inside BIGINT for any sane
 # k, so the estimator division is exact integer math in every engine
 B = 52
@@ -199,45 +201,42 @@ def neighborhood_function(
     which AQE splits like any skewed key, instead of one k·degree
     element array in a single aggregation buffer. Sub-k neighborhoods
     (the common case in sparse KGs) are EXACT distinct counts.
-    ``localCheckpoint`` per round keeps the iterative plan flat.
+    ``spark_util.iterate`` truncates each round's sketches, keeping the
+    iterative plan flat.
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    e = (
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        )
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    from .graph import _edges_and_nodes
+
+    e, nodes = _edges_and_nodes(edges, src_col, dst_col)
     state = nodes.select("node", _hash52(F.col("node")).alias("h"))
     state = state.localCheckpoint(eager=True)
 
     num = (k - 1) * SPACE
     w = Window.partitionBy("node").orderBy("h")
-    out = None
-    for r in range(1, rounds + 1):
+
+    # state (sketch, earlier sketches): every round's sketch is read by
+    # the next round and by its own estimate
+    def _merge(st, _r):
+        state, levels = st
         msgs = e.join(
             state.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "h")
-        state = (
+        nxt = (
             state.union(msgs)
             .distinct()
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
             .select("node", "h")
-            .localCheckpoint(eager=True)
         )
-        est = state.groupBy("node").agg(
+        return nxt, levels + (state,)
+
+    (last, levels), _ = iterate(_merge, (state, ()), rounds)
+    out = None
+    for r, sketch in enumerate(levels[1:] + (last,), start=1):
+        est = sketch.groupBy("node").agg(
             F.count("*").cast("int").alias("n_hashes"),
             F.max("h").alias("kth"),
         ).select(

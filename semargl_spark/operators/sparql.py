@@ -74,8 +74,11 @@ language; this is target-side surface over the constructed KG.
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame
+
+from ..spark_util import iterate
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -1380,8 +1383,8 @@ def concise_bounded_description(
 
     Semi-naive: the frontier is the NEW bnode objects only (a seen-set
     anti-join kills cycles), each hop is one left-semi join of the
-    statement table against a bnode-id frontier, and the per-hop
-    emptiness probe bounds the loop — depth beyond ``max_depth`` with
+    statement table against a bnode-id frontier, and
+    ``spark_util.iterate``'s per-hop emptiness probe bounds the loop — depth beyond ``max_depth`` with
     a live frontier raises instead of silently truncating the
     description. Bnode closure depth in real data is tiny (a handful
     of levels); the statement table is touched once per level through
@@ -1394,33 +1397,38 @@ def concise_bounded_description(
     if max_depth < 1:
         raise ValueError(f"max_depth must be >= 1, got {max_depth}")
     seed = statements.filter(F.col("subj").isin(list(resources)))
-    out = seed
     frontier = (
         seed.filter(F.col("obj_kind") == "bnode")
         .select(F.col("obj").alias("subj"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    seen = frontier
-    for _ in range(max_depth):
-        if not frontier.take(1):
-            return out.distinct()
+
+    # state (frontier, seen, levels): the last level's new bnodes, every
+    # bnode before them, and the statements of each expanded level
+    def _expand(state, _r):
+        frontier, seen, levels = state
+        seen = seen.unionByName(frontier)
+        # read twice: the output and the next frontier
         nxt = statements.join(frontier, "subj", "leftsemi").localCheckpoint(
             eager=False
         )
-        out = out.unionByName(nxt)
-        frontier = (
+        new = (
             nxt.filter(F.col("obj_kind") == "bnode")
             .select(F.col("obj").alias("subj"))
             .distinct()
             .join(seen, "subj", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        seen = seen.unionByName(frontier).localCheckpoint(eager=False)
-    if frontier.take(1):
+        return new, seen, levels + (nxt,)
+
+    (_, _, levels), closed = iterate(
+        _expand, (frontier, frontier.limit(0), ()), max_depth,
+        until=lambda s: s[0],
+    )
+    if not closed:
         raise RuntimeError(
             f"CBD bnode closure exceeded max_depth={max_depth}; raise the "
             "bound (real closures are shallow — a deep chain usually "
             "means a pathological or adversarial document)"
         )
-    return out.distinct()
+    return reduce(DataFrame.unionByName, levels, seed).distinct()

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..spark_util import iterate
+
 _STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"],
     "de": ["der", "die", "das", "und", "ist", "nicht", "ein", "mit", "zu"],
@@ -1433,7 +1435,8 @@ def textrank_segments(
         "doc_id", "sid", F.lit(scale).cast("long").alias("r")
     )
     base = (15 * scale) // 100
-    for _ in range(rounds):
+
+    def _rank(r, _round):
         flow = (
             edges.join(
                 r.select(
@@ -1449,21 +1452,14 @@ def textrank_segments(
             .groupBy("doc_id", "sid")
             .agg(F.sum("f").alias("inflow"))
         )
-        r = (
-            nodes.join(flow, ["doc_id", "sid"], "left")
-            .select(
-                "doc_id", "sid",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        "(85 * coalesce(inflow, 0)) div 100"
-                    )
-                )
-                .cast("long")
-                .alias("r"),
-            )
-            .localCheckpoint(eager=False)
+        return nodes.join(flow, ["doc_id", "sid"], "left").select(
+            "doc_id", "sid",
+            (F.lit(base) + F.expr("(85 * coalesce(inflow, 0)) div 100"))
+            .cast("long")
+            .alias("r"),
         )
+
+    r = iterate(_rank, r, rounds)[0]
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("doc_id").orderBy(

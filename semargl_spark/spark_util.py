@@ -13,7 +13,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _SHIPPED: set[str] = set()
 
@@ -109,6 +109,46 @@ def is_missing_table(exc: Exception) -> bool:
     return isinstance(exc, AnalysisException) and (
         "TABLE_OR_VIEW_NOT_FOUND" in str(exc)
     )
+
+
+def iterate(step, state, rounds: int, until=None):
+    """Run a round loop → ``(state, stopped)``: the one place that
+    decides how every iterative operator truncates lineage and when it
+    stops.
+
+    ``step(state, r)`` builds round ``r``'s state (r = 1..``rounds``)
+    without running an action. ``state`` is a DataFrame or a tuple whose
+    non-DataFrame items pass through. After each round every DataFrame
+    item is ``localCheckpoint``-ed: the first eagerly when there is a
+    stop test (the test reads it, then the next round does), the rest
+    lazily. ``until(state)`` is the round's delta; the loop stops once
+    it is empty, probed with ``isEmpty()`` before every round and after
+    the last. Without ``until`` exactly ``rounds`` rounds run (0 is
+    allowed). ``stopped`` says whether the stop test fired; a loop that
+    must converge raises when it did not.
+
+    The initial state is the caller's and must be cheap to re-read. A
+    step that folds a delta into an accumulator folds the one it
+    receives (last round's, already checkpointed), not the one it
+    builds, which the lazy accumulator would otherwise re-derive.
+    """
+
+    def truncate(x, eager):
+        return x.localCheckpoint(eager=eager) if isinstance(x, DataFrame) else x
+
+    def stop(s):
+        return until is not None and until(s).isEmpty()
+
+    for r in range(1, rounds + 1):
+        if stop(state):
+            return state, True
+        state = step(state, r)
+        if isinstance(state, tuple):
+            rest = tuple(truncate(x, False) for x in state[1:])
+            state = (truncate(state[0], until is not None),) + rest
+        else:
+            state = truncate(state, until is not None)
+    return state, stop(state)
 
 
 def delete_path(spark: SparkSession, path: str) -> None:

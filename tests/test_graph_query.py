@@ -800,6 +800,23 @@ def test_ppr_concentrates_on_seed_neighborhood(spark):
         personalized_pagerank(edges, [], iterations=2)
 
 
+def test_ppr_with_every_node_seeded_equals_pagerank(spark):
+    from semargl_spark.operators.graph import pagerank, personalized_pagerank
+
+    # d and e are dangling (no out-edges): their mass is spread over
+    # every seed, which with every node seeded is pagerank's uniform rule
+    edges = _tri(spark, [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a"),
+                         ("a", "p", "d"), ("c", "p", "e")]).select("src", "dst")
+    nodes = ["a", "b", "c", "d", "e"]
+    pr = sorted(tuple(r) for r in pagerank(edges, iterations=4).collect())
+    ppr = sorted(
+        tuple(r)
+        for r in personalized_pagerank(edges, nodes, iterations=4).collect()
+    )
+    assert [n for n, _ in pr] == nodes
+    assert ppr == pr
+
+
 def test_ppr_partition_invariant_bit_exact(spark):
     from semargl_spark.operators.graph import personalized_pagerank
 

@@ -34,6 +34,23 @@ def test_connected_components_pair(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
+def test_connected_components_unconverged_raises(spark):
+    import random
+
+    import pytest
+
+    # a 300-node path whose ids are shuffled, so min-label propagation
+    # cannot ride the lexicographic order: one contraction round is far
+    # too few, and returning partial components must be refused
+    ids = [f"n{i:03d}" for i in range(300)]
+    random.Random(7).shuffle(ids)
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges, max_iter=1).collect()
+    got = connected_components(edges).select("component").distinct().collect()
+    assert [r["component"] for r in got] == ["n000"]
+
+
 def test_kg_edges_canonicalized(spark):
     t = synth_transcripts(spark, SF_DIR, fmt="ntriples").limit(40)
     st = triples(extract_statements(t))

@@ -366,3 +366,25 @@ def test_sft_render_stage_and_resume(spark, prepared):
     assert s1["sft_conversations"] == n_convs
     assert s1["sft_bins"] == s0["sft_bins"]
     assert _ledger_copies(spark, out) == 1
+
+
+def test_resume_reraises_a_corrupt_ledger_read(spark, prepared):
+    """--resume treats only a MISSING ledger as "no lineage yet": a
+    ledger file that cannot be read must fail the run instead of
+    silently re-running every stage."""
+    out = str(prepared / "out_corrupt")
+    kw = dict(
+        input_path=str(prepared / "in"),
+        output=out,
+        dictionary=str(prepared / "dict"),
+        run_id="r-corrupt",
+    )
+    run(spark, **kw)
+    # a partition of this run that no stage writes, so no stage's
+    # overwrite replaces the corrupt file before the ledger read
+    bad = prepared / "out_corrupt" / "lineage" / "run_id=r-corrupt" / "stage=bogus"
+    bad.mkdir(parents=True)
+    (bad / "part-00000-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception) as err:
+        run(spark, **kw, resume=True)
+    assert "Path does not exist" not in str(err.value)

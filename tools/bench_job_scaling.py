@@ -29,7 +29,7 @@ import subprocess
 import sys
 import tempfile
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _steal():

@@ -36,11 +36,10 @@ import subprocess
 import sys
 import tempfile
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _GEN = r"""
 import sys
-sys.path.insert(0, "/root/repo")
 sf_dir = sys.argv[1]; tpd = int(sys.argv[2]); out = sys.argv[3]; files = int(sys.argv[4])
 from semargl_spark.spark_util import tuned_session
 spark = tuned_session(parallelism=16, app_name="scale-gen")
@@ -53,7 +52,6 @@ spark.stop()
 
 _WORKER = r"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
 par = int(sys.argv[1]); inp = sys.argv[2]
 from semargl_spark.spark_util import tuned_session
 spark = tuned_session(parallelism=par, app_name=f"scale-{par}")
@@ -99,7 +97,7 @@ spark.stop()
 def _run_py(code: str, *args: str) -> str:
     out = subprocess.run(
         [sys.executable, "-c", code, *args],
-        capture_output=True, text=True, timeout=3600,
+        capture_output=True, text=True, timeout=3600, cwd=REPO,
     )
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
@@ -120,7 +118,7 @@ def main():
     n_files = 2 * 4 * n  # 8 waves at local[N], 2 at local[4N]
     subprocess.run(
         [sys.executable, "-c", _GEN, sf_dir, str(tpd), inp, str(n_files)],
-        check=True, timeout=3600,
+        check=True, timeout=3600, cwd=REPO,
     )
     try:
         # interleave the levels across rounds: this sandbox shows ±10%

@@ -19,7 +19,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from semargl_spark.functions.ask import AskQuery
 from semargl_spark.functions.graph_compare import diff, isomorphic
@@ -329,8 +330,8 @@ def main():
         rate = res["passed"] / res["total"] if res["total"] else 0
         print(f"{res['suite']}: {res['passed']}/{res['total']} = {rate:.1%}"
               + (f"  P={res.get('precision')} R={res.get('recall')}" if "precision" in res else ""))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/conformance.json", "w") as f:
+    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
+    with open(os.path.join(REPO, "BENCH", "conformance.json"), "w") as f:
         json.dump(out, f, indent=1, default=str)
 
 

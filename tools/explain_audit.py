@@ -8,10 +8,12 @@ Usage: python tools/explain_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def plan_of(df) -> str:
@@ -701,7 +703,7 @@ def main():
         not offenders,
     ))
 
-    with open("/root/repo/BENCH/plans.md", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "plans.md"), "w") as f:
         f.write("# Physical-plan audit (tools/explain_audit.py)\n\n")
         f.write("## Checks\n\n")
         for name, ok in checks:
