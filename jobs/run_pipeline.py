@@ -3,14 +3,18 @@
 jobs/run_pipeline.py --input ... --output ...``).
 
 Stages: extract → link → canon → [infer] → [owl] → [resolve] → [fuse] →
-[validate] → [c14n] → merge → [sparql], with per-stage lineage rows and
-idempotent partitioned writes (checkpoint-resume: re-running overwrites
-only the partitions it produces; the lineage table records per-partition
-row counts + checksums for audit). Bracketed stages are opt-in flags:
---ontology (RDFS), --owl-axioms (OWL-RL property semantics),
---resolve-functional (truth-discovery conflict resolution),
---fuse-sameas (sameAs entity fusion), --shapes (SHACL-lite),
---content-address (RDFC-1.0 per-document hashes), --sparql.
+[validate] → [c14n] → [sft] → merge → [sparql]. Each stage up to merge
+crosses one stage step in ``run``: it overwrites the stage's side
+outputs under <output>/ and appends the stage's lineage rows, which
+double as the run's stage ledger. ``--resume`` skips the writes of every
+stage the ledger records for the run-id, still re-derives the frames
+later stages need, and reads side-output counts back from the written
+tables, so a fresh and a resumed run report the same summary. Bracketed
+stages are opt-in flags: --ontology (RDFS), --owl-axioms (OWL-RL
+property semantics), --resolve-functional (truth-discovery conflict
+resolution), --fuse-sameas (sameAs entity fusion), --shapes
+(SHACL-lite), --content-address (RDFC-1.0 per-document hashes),
+--sft-render (chat-template SFT exit), --sparql.
 
 Build the zip with:  python -c "from semargl_spark.spark_util import \
 build_pyfiles_zip; print(build_pyfiles_zip('semargl_spark.zip'))"
@@ -26,7 +30,7 @@ import time
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True,
+    ap.add_argument("--input", dest="input_path", required=True,
                     help="transcripts parquet dir (conv_id, turn_idx, role, text, tool, ts[, fmt])")
     ap.add_argument("--output", required=True, help="output dir for nodes/edges/lineage")
     ap.add_argument("--run-id", default=None)
@@ -103,29 +107,15 @@ def main(argv=None) -> int:
         # without the original run-id the lineage filter matches nothing
         # and every stage silently re-runs — refuse instead
         ap.error("--resume requires --run-id (the id of the run to resume)")
-    ctx_registry = None
     if args.context_registry:
-        import json as _json
-
         with open(args.context_registry, encoding="utf-8") as fh:
-            ctx_registry = _json.load(fh)
+            args.context_registry = json.load(fh)
 
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("semargl-kg-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    summary = run(spark, input_path=args.input, output=args.output,
-                  run_id=args.run_id, dictionary=args.dictionary,
-                  resume=args.resume, fuzzy_link=args.fuzzy_link,
-                  shapes=args.shapes, ontology=args.ontology,
-                  owl_axioms=args.owl_axioms,
-                  fuse_sameas=args.fuse_sameas,
-                  resolve_functional=args.resolve_functional,
-                  content_address=args.content_address,
-                  sft_render=args.sft_render,
-                  sft_capacity=args.sft_capacity,
-                  sparql=args.sparql,
-                  context_registry=ctx_registry)
+    summary = run(spark, **vars(args))
     print(json.dumps(summary))
     spark.stop()
     return 0
@@ -159,8 +149,8 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
 
     # checkpoint-resume (north_rule): the lineage table doubles as the
     # stage ledger — a stage whose lineage rows for this run_id are
-    # already recorded completed its (idempotent) write before the
-    # previous attempt died, so --resume skips it
+    # already recorded completed its (idempotent) writes before the
+    # previous attempt died, so --resume skips them
     done_stages: set[str] = set()
     if resume:
         try:
@@ -178,6 +168,28 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             if not is_missing_path(exc):
                 raise
 
+    resumed: list[str] = []
+    summary: dict = {"run_id": run_id}
+
+    def stage(name: str, df, **tables) -> None:
+        """The stage boundary. A stage the resumed ledger records skips
+        its writes; otherwise each side output ``table=frame`` is
+        overwritten at ``<output>/<table>``, then the stage's ledger
+        rows, an audit of ``df``, are written. Either way the caller
+        goes on to derive the frames later stages need."""
+        if name in done_stages:
+            resumed.append(name)
+            return
+        for table, frame in tables.items():
+            frame.write.mode("overwrite").parquet(f"{output}/{table}")
+        write_lineage(lineage_rows(df, run_id, name), f"{output}/lineage")
+
+    def written(table: str):
+        """A table of this run read back from disk: side-output counts
+        agree between a fresh run and a resumed one that skipped the
+        write, and a resumed stage never recomputes a table to count it."""
+        return spark.read.parquet(f"{output}/{table}")
+
     # named observation on the extraction output: per-run metric rows
     # (statements / error statements) collected by the JVM during the
     # job's own actions — zero extra passes, the production-monitoring
@@ -194,38 +206,24 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         F.count(F.lit(1)).alias("rows"),
         F.sum((F.col("obj_kind") == "error").cast("long")).alias("error_rows"),
     ).persist()
+    stage("extract", statements)
     st = triples(statements)
     err = errors(statements)
 
-    resumed = sorted(done_stages)
-    if "extract" not in done_stages:
-        write_lineage(lineage_rows(st, run_id, "extract"), f"{output}/lineage")
-
-    equiv = None
+    components = None
     if dictionary:
-        dict_df = spark.read.parquet(dictionary)
         linker = fuzzy_link_entities if fuzzy_link else link_entities
-        links = linker(st, dict_df).persist()
-        if "link" not in done_stages:
-            links.write.mode("overwrite").parquet(f"{output}/links")
-            write_lineage(lineage_rows(links, run_id, "link"), f"{output}/lineage")
-        equiv = links.select(
+        links = linker(st, spark.read.parquet(dictionary)).persist()
+        stage("link", links, links=links)
+        components = connected_components(links.select(
             F.col("mention_node").alias("src"), F.col("canonical_iri").alias("dst")
-        ).distinct()
-
-    components = connected_components(equiv) if equiv is not None else None
-    if components is not None and "canon" not in done_stages:
-        write_lineage(
-            lineage_rows(components, run_id, "canon"), f"{output}/lineage"
-        )
+        ).distinct())
+        stage("canon", components)
 
     if ontology:
         # RDFS materialization BEFORE merge: entailed triples join the
         # asserted ones in the edge tables (closure pre-composed on the
-        # driver, one broadcast join per rule). The TRANSFORMATION runs
-        # unconditionally — a resumed run whose merge is still pending
-        # must re-derive the same statement set; only the (idempotent)
-        # lineage write is skipped
+        # driver, one broadcast join per rule)
         from semargl_spark.kernels.ntriples import parse as parse_ntriples
         from semargl_spark.operators.vocab import rdfs_infer
 
@@ -239,18 +237,12 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             onto_triples,
         ).select(
             "subj", "pred", "obj", "obj_kind",
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("dtype"),
-            F.lit(None).cast("string").alias("graph"),
             F.lit("rdfs").alias("conv_id"),
             F.lit(0).cast("int").alias("turn_idx"),
         )
         st = st.unionByName(inferred, allowMissingColumns=True)
-        if "infer" not in done_stages:
-            write_lineage(lineage_rows(inferred, run_id, "infer"),
-                          f"{output}/lineage")
+        stage("infer", inferred)
 
-    summary_owl = None
     if owl_axioms:
         # OWL-RL property semantics over the IRI-valued statement set:
         # inverse/symmetric mirrors, transitive fixpoints, and
@@ -278,19 +270,13 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         ).select(
             "subj", "pred", "obj",
             F.lit("iri").alias("obj_kind"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("dtype"),
-            F.lit(None).cast("string").alias("graph"),
             F.lit("owl").alias("conv_id"),
             F.lit(0).cast("int").alias("turn_idx"),
         ).localCheckpoint(eager=False)
         st = st.unionByName(owl_inf, allowMissingColumns=True)
-        if "owl" not in done_stages:
-            write_lineage(lineage_rows(owl_inf, run_id, "owl"),
-                          f"{output}/lineage")
-        summary_owl = owl_inf.count()
+        stage("owl", owl_inf)
+        summary["owl_inferred"] = owl_inf.count()
 
-    summary_resolved = None
     if resolve_functional:
         # conflict resolution: for each listed predicate keep ONE object
         # per subject by 2-round source-reliability voting (conv_id is
@@ -313,12 +299,9 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
                 winners, ["subj", "pred", "obj"], "left_semi"
             )
         )
-        if "resolve" not in done_stages:
-            write_lineage(lineage_rows(winners, run_id, "resolve"),
-                          f"{output}/lineage")
-        summary_resolved = winners.count()
+        stage("resolve", winners)
+        summary["resolved_claims"] = winners.count()
 
-    summary_fused = None
     if fuse_sameas:
         # entity fusion: close the sameAs pairs now present (asserted +
         # owl-inferred) into classes, rewrite IRI subjects/objects to
@@ -350,12 +333,10 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             )
             .drop("_csub", "_cobj")
         )
-        if "fuse" not in done_stages:
-            write_lineage(lineage_rows(mapping, run_id, "fuse"),
-                          f"{output}/lineage")
-        summary_fused = mapping.count()
+        stage("fuse", mapping)
+        summary["fused_nodes"] = mapping.count()
 
-    if shapes and "validate" not in done_stages:
+    if shapes:
         # data-quality side output: violation rows only, never the
         # conforming majority
         from semargl_spark.operators.validate import validate_shapes
@@ -366,14 +347,9 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             st.select("subj", "pred", "obj", "obj_kind", "dtype").distinct(),
             shape_list,
         )
-        violations.write.mode("overwrite").parquet(f"{output}/violations")
-        write_lineage(lineage_rows(violations, run_id, "validate"),
-                      f"{output}/lineage")
-        summary_violations = violations.count()
-    else:
-        summary_violations = None
+        stage("validate", violations, violations=violations)
+        summary["violations"] = written("violations").count()
 
-    summary_content = None
     if content_address:
         # content addressing runs over the ORIGINAL per-document
         # statements (pre-fusion rewrites — the address identifies what
@@ -383,22 +359,15 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         addrs = c14n_doc_hashes(
             st.filter(F.col("conv_id") != "owl")
         ).localCheckpoint(eager=False)
-        if "c14n" not in done_stages:
-            addrs.write.mode("overwrite").parquet(
-                f"{output}/content_addresses"
-            )
-            write_lineage(lineage_rows(addrs, run_id, "c14n"),
-                          f"{output}/lineage")
-        summary_content = addrs.filter(F.col("error").isNull()).select(
-            "doc_sha256"
-        ).distinct().count()
+        stage("c14n", addrs, content_addresses=addrs)
+        summary["distinct_content"] = written("content_addresses").filter(
+            F.col("error").isNull()
+        ).select("doc_sha256").distinct().count()
 
-    summary_sft = None
     if sft_render:
         # SFT exit over the SAME input transcripts (pre-extraction
         # surface): chat-template rendering with loss-mask spans plus
-        # the packed-bin manifest a loader consumes; both writes are
-        # idempotent overwrites, resume-skipped via the lineage ledger
+        # the packed-bin manifest a loader consumes
         from semargl_spark.operators.conversation import chat_render
         from semargl_spark.operators.curation import pack_manifest
 
@@ -419,43 +388,17 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             staged, capacity=sft_capacity, n_shards=64,
             id_col="conv_num", text_col="rendered",
         )
-        if "sft" not in done_stages:
-            rendered.write.mode("overwrite").parquet(f"{output}/sft")
-            manifest.write.mode("overwrite").parquet(
-                f"{output}/sft_manifest"
-            )
-            write_lineage(lineage_rows(rendered, run_id, "sft"),
-                          f"{output}/lineage")
-        summary_sft = {
-            "sft_conversations": spark.read.parquet(
-                f"{output}/sft"
-            ).count(),
-            "sft_bins": spark.read.parquet(
-                f"{output}/sft_manifest"
-            ).count(),
-        }
+        stage("sft", rendered, sft=rendered, sft_manifest=manifest)
+        summary["sft_conversations"] = written("sft").count()
+        summary["sft_bins"] = written("sft_manifest").count()
 
     if "merge" in done_stages:
         # whole run already completed: report from the materialized tables
-        summary = {
-            "run_id": run_id,
-            "nodes": spark.read.parquet(f"{output}/nodes").count(),
-            "edges": spark.read.parquet(f"{output}/edges").count(),
-        }
+        resumed.append("merge")
+        summary["nodes"] = written("nodes").count()
+        summary["edges"] = written("edges").count()
     else:
-        summary = materialize_kg(st, components, output, run_id)
-    if summary_violations is not None:
-        summary["violations"] = summary_violations
-    if summary_owl is not None:
-        summary["owl_inferred"] = summary_owl
-    if summary_resolved is not None:
-        summary["resolved_claims"] = summary_resolved
-    if summary_fused is not None:
-        summary["fused_nodes"] = summary_fused
-    if summary_content is not None:
-        summary["distinct_content"] = summary_content
-    if summary_sft is not None:
-        summary.update(summary_sft)
+        summary.update(materialize_kg(st, components, output, run_id))
     summary["errors"] = err.count()
     summary["statements"] = st.count()
     try:
@@ -498,8 +441,10 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             res.write.mode("overwrite").parquet(f"{output}/query")
             summary["query_rows"] = spark.read.parquet(f"{output}/query").count()
     if resumed:
-        summary["resumed_stages"] = resumed
+        summary["resumed_stages"] = sorted(resumed)
     statements.unpersist()
+    if dictionary:
+        links.unpersist()
     # in-job wall (excludes JVM/session boot — the long-running-
     # application view a cluster deployment amortizes); used by
     # tools/bench_job_scaling.py

@@ -10,8 +10,10 @@ Spark-first shape:
   can swap in);
 * every stage emits per-partition lineage rows (run_id, stage,
   partition_id, input/output/error rows, order-insensitive checksum,
-  wall time) enabling checkpoint-resume: a partition whose lineage row
-  exists and matches can be skipped on retry.
+  wall time) plus one stage-summary row. The lineage table is the
+  run's stage ledger: checkpoint-resume works per stage, from the
+  distinct ``stage`` names recorded for the run_id — a recorded stage
+  skips its writes on retry (jobs/run_pipeline.py).
 """
 
 from __future__ import annotations
@@ -92,11 +94,10 @@ def lineage_rows(
     partition with row counts and an order-insensitive checksum.
 
     ``error_rows`` counts processor-graph rows when the frame carries an
-    ``obj_kind`` column (statements-shaped input), else 0. ``input_rows``
-    equals ``output_rows`` for these row-preserving audits — a stage
-    that filters should emit lineage on both sides. ``wall_ms`` is not
-    measured by this aggregate (0); the job-level summary carries wall
-    time.
+    ``obj_kind`` column (statements-shaped input), else 0. Each stage
+    audits its output frame only, so ``input_rows`` equals
+    ``output_rows``. ``wall_ms`` is not measured by this aggregate (0);
+    the job-level summary carries wall time.
 
     By default the shard key is the *physical* partition id
     (``spark_partition_id``) and the row hash Spark's murmur3 — fastest,

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..operators.extract import extract_statements
 from ..operators.materialize import kg_edges, lineage_rows, write_lineage
+from ..spark_util import is_missing_path
 from .stream_extract import read_transcript_stream
 
 
@@ -146,12 +147,17 @@ def canonical_view(
     """Current (node, component) assignment from the changelog: the
     latest row per node (ties impossible — one row per node per batch).
     ``before_batch`` restricts to strictly earlier batches (the
-    replay-safe fold input). None when no log exists yet."""
+    replay-safe fold input). None when no log exists yet; any other
+    read failure propagates, because folding a batch into an empty
+    assignment after a transient or corrupt read would relabel every
+    component it touches."""
     from pyspark.sql.window import Window
 
     try:
         log = spark.read.parquet(f"{out_dir}/components_log")
-    except Exception:
+    except Exception as exc:
+        if not is_missing_path(exc):
+            raise
         return None
     if before_batch is not None:
         log = log.filter(F.col("batch_id") < before_batch)

@@ -12,12 +12,15 @@ correctness surface here, not an optimization.
 from __future__ import annotations
 
 import concurrent.futures
+import os
 
 import pytest
 
 from jobs.run_pipeline import run
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+RUN_QUERY = os.path.join(ROOT, "jobs", "run_query.py")
 
 
 @pytest.fixture(scope="module")
@@ -253,9 +256,9 @@ def test_run_query_job_lists_and_runs(tmp_path):
     import subprocess
     import sys
 
-    env = dict(__import__("os").environ)
+    env = dict(os.environ)
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_query.py",
+        [sys.executable, RUN_QUERY,
          "--sf-dir", SF_DIR, "--query", "x", "--list"],
         capture_output=True, text=True, env=env, timeout=120,
     )
@@ -264,7 +267,7 @@ def test_run_query_job_lists_and_runs(tmp_path):
     assert len(names) >= 180
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_query.py",
+        [sys.executable, RUN_QUERY,
          "--sf-dir", SF_DIR, "--query", "corpus_mix",
          "--output", str(tmp_path / "out")],
         capture_output=True, text=True, env=env, timeout=300,
@@ -274,7 +277,7 @@ def test_run_query_job_lists_and_runs(tmp_path):
     assert summary["query"] == "corpus_mix" and summary["rows"] > 0
 
     r = subprocess.run(
-        [sys.executable, "/root/repo/jobs/run_query.py",
+        [sys.executable, RUN_QUERY,
          "--sf-dir", SF_DIR, "--query", "nope"],
         capture_output=True, text=True, env=env, timeout=120,
     )
@@ -288,7 +291,7 @@ def test_content_address_stage_and_resume(spark, prepared):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))
     from run_pipeline import run
 
     out = str(prepared / "out_c14n")
@@ -320,7 +323,7 @@ def test_sft_render_stage_and_resume(spark, prepared):
 
     from pyspark.sql import functions as F
 
-    sys.path.insert(0, "/root/repo/jobs")
+    sys.path.insert(0, os.path.join(ROOT, "jobs"))
     from run_pipeline import run
 
     out = str(prepared / "out_sft")
@@ -388,3 +391,80 @@ def test_resume_reraises_a_corrupt_ledger_read(spark, prepared):
     with pytest.raises(Exception) as err:
         run(spark, **kw, resume=True)
     assert "Path does not exist" not in str(err.value)
+
+
+@pytest.mark.parametrize("flag", ["shapes", "content_address", "sft_render"])
+def test_resumed_run_reports_the_fresh_summary(spark, prepared, tmp_path, flag):
+    """A resumed run skips the writes of every stage its ledger records
+    yet reports the fresh run's summary, key for key: side-output counts
+    are read back from the written tables, never dropped or recomputed."""
+    import json
+
+    from semargl_spark.sources.transcripts import XSD_INTEGER
+
+    extra = {flag: True}
+    if flag == "shapes":
+        # the domain axiom types every knows-subject a Person, and each
+        # Person's decimal urn:p:score breaks an integer datatype shape
+        onto = tmp_path / "onto.nt"
+        onto.write_text(
+            "<urn:p:knows> <http://www.w3.org/2000/01/rdf-schema#domain> "
+            "<urn:t:Person> .\n"
+        )
+        shapes = tmp_path / "shapes.json"
+        shapes.write_text(json.dumps([
+            {"shape_id": "score", "target_class": "urn:t:Person",
+             "path": "urn:p:score", "datatype": XSD_INTEGER},
+        ]))
+        extra = {"shapes": str(shapes), "ontology": str(onto)}
+    out = str(tmp_path / "out")
+    kw = dict(input_path=str(prepared / "in"), output=out,
+              dictionary=str(prepared / "dict"), run_id=f"r-{flag}", **extra)
+    fresh = run(spark, **kw)
+    resumed = run(spark, **kw, resume=True)
+
+    ledger = {
+        r["stage"]
+        for r in spark.read.parquet(f"{out}/lineage").select("stage").distinct().collect()
+    }
+    assert set(resumed["resumed_stages"]) == ledger
+    volatile = ("wall_sec", "observed", "resumed_stages")
+    assert {k: v for k, v in resumed.items() if k not in volatile} == {
+        k: v for k, v in fresh.items() if k not in volatile
+    }
+    if flag == "shapes":
+        assert fresh["violations"] > 0
+    assert _ledger_copies(spark, out) == 1
+
+
+def test_extract_ledger_row_counts_error_rows(spark, tmp_path):
+    """The extract stage audits the statements frame, error rows
+    included: its stage-summary ledger row (partition_id = -1) counts the
+    error rows the job summary reports."""
+    from pyspark.sql import functions as F
+
+    from semargl_spark.sources.transcripts import synth_transcripts
+
+    # the mixed corpus: every fifth turn is malformed markup
+    synth_transcripts(spark, SF_DIR, turns_per_doc=5).limit(200).write.parquet(
+        str(tmp_path / "in")
+    )
+    out = str(tmp_path / "out")
+    summary = run(spark, input_path=str(tmp_path / "in"), output=out,
+                  run_id="r-errors")
+    rows = (
+        spark.read.parquet(f"{out}/lineage")
+        .filter((F.col("stage") == "extract") & (F.col("partition_id") == -1))
+        .collect()
+    )
+    assert len(rows) == 1
+    assert rows[0]["error_rows"] == summary["errors"] > 0
+
+
+def test_run_releases_every_frame_it_caches(spark, prepared, tmp_path):
+    """run() unpersists what it persists, so in-process callers (tests,
+    notebooks, benchmarks) get the session's cache back empty."""
+    spark.catalog.clearCache()
+    run(spark, input_path=str(prepared / "in"), output=str(tmp_path / "out"),
+        dictionary=str(prepared / "dict"), run_id="r-cache")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

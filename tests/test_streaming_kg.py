@@ -145,6 +145,23 @@ def test_stream_canonicalize_matches_batch_cc(spark):
         _sh.rmtree(base, ignore_errors=True)
 
 
+def test_canonical_view_reraises_a_corrupt_changelog_read(spark, tmp_path):
+    """Only a MISSING changelog reads as "no log yet": a changelog that
+    cannot be read must fail the fold, not fold the next batch into an
+    empty assignment."""
+    import pytest
+
+    from semargl_spark.streaming.stream_kg import canonical_view
+
+    assert canonical_view(spark, str(tmp_path / "fresh")) is None
+    bad = tmp_path / "out" / "components_log" / "batch_id=0"
+    bad.mkdir(parents=True)
+    (bad / "part-00000-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception) as err:
+        canonical_view(spark, str(tmp_path / "out"))
+    assert "Path does not exist" not in str(err.value)
+
+
 def test_stream_sessions_match_batch_sessionizer(spark, tmp_path):
     """Session windows drained via availableNow == the batch lag()
     sessionizer restricted to watermark-closed sessions."""
