@@ -11,7 +11,7 @@ training-data operators (dedup, similarity search, text analysis).
 Architecture (SURVEY.md §7):
 
     transcripts(conv_id, turn_idx, role, text, tool, ts)
-      → [extract]  mapInPandas vectorized parser kernels → triples
+      → [extract]  mapInArrow vectorized parser kernels → triples
       → [link]     broadcast-dictionary entity linking
       → [canon]    connected-components union-find (iterative DF joins)
       → [merge]    nodes/edges tables + lineage/metrics side outputs
@@ -21,3 +21,7 @@ testable and reusable inside any Arrow-batched UDF.
 """
 
 __version__ = "0.1.0"
+
+from ._worker_guard import install_in_worker
+
+install_in_worker()  # PySpark workers only: see _worker_guard

@@ -8,8 +8,11 @@ discovers the ``q_<gate>`` functions here by name.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
 from .operators import curation, dedup, materialize, similarity, text
 from .operators.canon import connected_components
@@ -39,19 +42,73 @@ ORACLES: dict[str, str] = {}
 STREAM_WORK_SEC: dict[str, float] = {}
 
 
-def _drain(q, key: str) -> None:
-    """awaitTermination + record the gate's per-batch work time."""
+class _BatchTimes(StreamingQueryListener):
+    """Every micro-batch's ``triggerExecution`` ms, by query run id and
+    batch id. The query's own ``recentProgress`` ring keeps only the
+    last 100 batches (``spark.sql.streaming.numRecentProgressUpdates``)."""
+
+    def __init__(self):
+        self.runs: dict[str, dict[int, float]] = {}
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        p = event.progress
+        self.runs.setdefault(str(p.runId), {}).update(_trigger_ms([p]))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+_BATCH_TIMES = weakref.WeakKeyDictionary()  # session → its _BatchTimes
+
+
+def _trigger_ms(progress) -> dict[int, float]:
+    return {
+        p["batchId"]: float(p["durationMs"].get("triggerExecution", 0))
+        for p in progress
+    }
+
+
+def _batch_times(spark: SparkSession) -> _BatchTimes | None:
+    """The session's progress listener, registered on first use. None on
+    Connect, where a listener runs server-side, away from this dict."""
+    from .spark_util import is_connect
+
+    if is_connect(spark):
+        return None
+    if spark not in _BATCH_TIMES:
+        listener = _BatchTimes()
+        spark.streams.addListener(listener)
+        _BATCH_TIMES[spark] = listener
+    return _BATCH_TIMES[spark]
+
+
+def _drain(spark, q, key: str) -> None:
+    """awaitTermination + record the gate's work time, summed over every
+    micro-batch of the run. Metrics never fail a gate."""
+    try:
+        listener = _batch_times(spark)
+        # batches that ended before a first-time listener was registered
+        batches = _trigger_ms(q.recentProgress)
+    except Exception:
+        listener, batches = None, {}
     q.awaitTermination()
     try:
-        ms = 0.0
-        for p in q.recentProgress:
-            d = p.get("durationMs") or {}
-            ms += float(d.get("triggerExecution", 0) or 0)
-        sec = round(ms / 1000.0, 3)
+        if listener is not None:
+            spark._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+            batches.update(listener.runs.pop(str(q.runId), {}))
+        else:
+            batches.update(_trigger_ms(q.recentProgress))
+        sec = round(sum(batches.values()) / 1000.0, 3)
         prev = STREAM_WORK_SEC.get(key)
         STREAM_WORK_SEC[key] = sec if prev is None else min(prev, sec)
     except Exception:
-        pass  # metrics must never fail a gate
+        pass
 
 
 def _docs(spark, sf_dir):
@@ -789,7 +846,7 @@ def q_stream_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # several files so maxFilesPerTrigger yields multiple micro-batches
     t.repartition(8, "conv_id").write.mode("overwrite").parquet(f"{base}/in")
     q = stream_to_kg(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
-    _drain(q, "stream_kg_edges")
+    _drain(spark, q, "stream_kg_edges")
     return kg_edges_view(spark, f"{base}/out")
 
 
@@ -2688,7 +2745,7 @@ def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = synth_transcripts(spark, sf_dir, fmt="ntriples")
     t.write.mode("overwrite").parquet(f"{base}/in")
     q = stream_extract(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
-    _drain(q, "stream_extract")
+    _drain(spark, q, "stream_extract")
     st = spark.read.parquet(f"{base}/out")
     return triples(st).select(
         "conv_id", "turn_idx", "subj", "pred", "obj", "obj_kind", "lang", "dtype"
@@ -2723,7 +2780,7 @@ def q_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, "stream_state")
+    _drain(spark, q, "stream_state")
     updates = spark.table(sink)
     return updates.groupBy("conv_id").agg(
         F.max("statements").alias("statements"),
@@ -2781,7 +2838,7 @@ def q_events_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, "events_stream_hourly")
+    _drain(spark, q, "events_stream_hourly")
     return spark.table(sink).select(
         "window_start", "event_type", F.col("n").cast("long"), "value_sum"
     )
@@ -3373,7 +3430,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs.unionAll(dupes).write.mode("overwrite").parquet(f"{base}/in")
     q = stream_dedup(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
-    _drain(q, "stream_dedup")
+    _drain(spark, q, "stream_dedup")
     survivors = spark.read.parquet(f"{base}/out")
     body = normalized_text("text")
     hashed = spark.read.parquet(f"{base}/in").select(
@@ -4297,7 +4354,7 @@ def q_events_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, "events_stream_sessions")
+    _drain(spark, q, "events_stream_sessions")
     return spark.table(sink).select(
         "session_start", "session_end", "user_id", F.col("n").cast("long")
     )
@@ -4478,7 +4535,7 @@ def q_events_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, "events_stream_join")
+    _drain(spark, q, "events_stream_join")
     return spark.table(sink).select(
         "view_id", "purchase_id", "user_id", "gap_us"
     )
@@ -5806,7 +5863,7 @@ def q_stream_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_canonicalize(
         spark, f"{base}/in", knows_equiv, f"{base}/out", f"{base}/ckpt"
     )
-    _drain(q, "stream_canon")
+    _drain(spark, q, "stream_canon")
     return canonical_view(spark, f"{base}/out")
 
 
@@ -6881,7 +6938,7 @@ def q_stream_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_cardinality(
         spark, f"{base}/in", f"{base}/state", f"{base}/ckpt", k=64
     )
-    _drain(q, "stream_cardinality")
+    _drain(spark, q, "stream_cardinality")
     return sketch_estimate(spark, f"{base}/state", k=64)
 
 
@@ -7731,7 +7788,7 @@ def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_heavy_hitters(
         spark, f"{base}/in", f"{base}/state", f"{base}/ckpt", d=4, w=1024
     )
-    _drain(q, "stream_heavy_hitters")
+    _drain(spark, q, "stream_heavy_hitters")
     vals = docs.select(
         F.explode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias("v")
     ).filter(F.col("v") != "")
@@ -8134,7 +8191,7 @@ def q_stream_c14n_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{base}/in"
     )
     q = stream_c14n(spark, f"{base}/in", f"{base}/out", f"{base}/ckpt")
-    _drain(q, "stream_c14n_dedup")
+    _drain(spark, q, "stream_c14n_dedup")
     return c14n_first_seen(spark, f"{base}/out")
 
 
@@ -9104,7 +9161,7 @@ def q_stream_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    _drain(q, "stream_sft")
+    _drain(spark, q, "stream_sft")
     return spark.table(sink).select(
         "conv_id", "rendered", "n_chars", "n_mask", "mask_spans"
     )
@@ -11704,7 +11761,7 @@ def q_stream_crawl(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = stream_crawl_frontier(
         spark, f"{base}/in", f"{base}/out", f"{base}/ckpt"
     )
-    _drain(q, "stream_crawl")
+    _drain(spark, q, "stream_crawl")
     return spark.read.parquet(f"{base}/out")
 
 

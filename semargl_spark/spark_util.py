@@ -119,10 +119,14 @@ def iterate(step, state, rounds: int, until=None):
     ``step(state, r)`` builds round ``r``'s state (r = 1..``rounds``)
     without running an action. ``state`` is a DataFrame or a tuple whose
     non-DataFrame items pass through. After each round every DataFrame
-    item is ``localCheckpoint``-ed: the first eagerly when there is a
-    stop test (the test reads it, then the next round does), the rest
-    lazily. ``until(state)`` is the round's delta; the loop stops once
-    it is empty, probed with ``isEmpty()`` before every round and after
+    item is checkpointed: the first eagerly when there is a stop test
+    (the test reads it, then the next round does), the rest lazily. A
+    classic session with ``sparkContext.getCheckpointDir()`` set gets a
+    reliable ``checkpoint()``, which survives losing an executor (and
+    recomputes the round once to write it); otherwise, and on Connect,
+    ``localCheckpoint``, whose blocks live on executor storage.
+    ``until(state)`` is the round's delta; the loop stops once it is
+    empty, probed with ``isEmpty()`` before every round and after
     the last. Without ``until`` exactly ``rounds`` rounds run (0 is
     allowed). ``stopped`` says whether the stop test fired; a loop that
     must converge raises when it did not.
@@ -134,7 +138,12 @@ def iterate(step, state, rounds: int, until=None):
     """
 
     def truncate(x, eager):
-        return x.localCheckpoint(eager=eager) if isinstance(x, DataFrame) else x
+        if not isinstance(x, DataFrame):
+            return x
+        spark = x.sparkSession
+        if not is_connect(spark) and spark.sparkContext.getCheckpointDir():
+            return x.checkpoint(eager=eager)
+        return x.localCheckpoint(eager=eager)
 
     def stop(s):
         return until is not None and until(s).isEmpty()

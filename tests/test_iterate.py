@@ -4,9 +4,12 @@ stopped-early report that convergent loops turn into their error."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from semargl_spark.spark_util import iterate
+
+from conftest import SF_DIR
 
 
 def _plan_nodes(df) -> int:
@@ -59,3 +62,39 @@ def test_cap_reports_not_stopped(spark):
     start = spark.range(2)
     same, stopped = iterate(keep, start, 0)
     assert same is start and not stopped
+
+
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """The session's reliable checkpoint dir, set for one test and then
+    unset again (PySpark has no public unset)."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield tmp_path / "ckpt"
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+
+
+def _rows(pdf):
+    cols = sorted(pdf.columns)
+    return sorted(
+        tuple(None if v is None else str(v) for v in r)
+        for r in pdf[cols].itertuples(index=False, name=None)
+    )
+
+
+@pytest.mark.parametrize("gate", ["canonicalize", "kg_pagerank"])
+def test_reliable_checkpoints_keep_oracle_output(spark, checkpoint_dir, gate):
+    """With a checkpoint dir set, CC and PageRank write their rounds'
+    reliable checkpoints there and still match their DuckDB oracles."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    got = entry.queries()[gate](spark, SF_DIR).toPandas()
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
+    want = con.sql(entry.oracle_sql()[gate]).df()
+    assert sorted(got.columns) == sorted(want.columns)
+    assert _rows(got) == _rows(want)
+    assert any(p.is_dir() for p in checkpoint_dir.glob("*/rdd-*"))

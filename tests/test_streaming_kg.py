@@ -643,3 +643,30 @@ def test_stream_chat_render_ttl_drop_discards_stale(spark, tmp_path):
     finally:
         q.stop()
     assert sorted(r["conv_id"] for r in rows) == ["done"]
+
+
+def test_stream_work_time_covers_every_micro_batch(spark, tmp_path):
+    """A gate's streaming work time sums every micro-batch of its run,
+    not just the 100 the query's ``recentProgress`` ring keeps."""
+    from semargl_spark import queries_pipeline as QP
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for i in range(105):
+        (src / f"part-{i:03d}.txt").write_text(f"line {i}\n")
+    q = (
+        spark.readStream.format("text").option("maxFilesPerTrigger", 1)
+        .load(str(src))
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    key = f"test_work_{tmp_path.name}"
+    QP._drain(spark, q, key)
+    ring = q.recentProgress
+    dropped = ring[0]["batchId"]
+    assert dropped >= 5 and ring[-1]["batchId"] == 104
+    ring_ms = sum(p["durationMs"]["triggerExecution"] for p in ring)
+    # the batches the ring dropped ran too, each for at least 1 ms
+    assert QP.STREAM_WORK_SEC.pop(key) >= round((ring_ms + dropped) / 1000.0, 3)
