@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the host's CPU count). Prints ONE
+JSON line:
 
     {"metric": "triples_per_sec", "value": N, "unit": "sec",
      "queries": {name: sec, ...}, "sf": ...}
@@ -37,7 +38,7 @@ def _cpu_ticks() -> tuple[int, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     turns_per_doc = int(os.environ.get("SPARK_GRAFT_TURNS_PER_DOC", "64"))
     steal0, total0 = _cpu_ticks()
 
@@ -69,7 +70,7 @@ def main() -> None:
             best = dt if best is None else min(best, dt)
         timings[name] = round(best, 3)
 
-    # warm the JVM + the mapInPandas python-worker pool so per-query
+    # warm the JVM + the mapInArrow python-worker pool so per-query
     # numbers measure the pipeline, not interpreter startup (reference
     # benches also warm up, BenchmarkRdfa.java:86-92)
     triples(

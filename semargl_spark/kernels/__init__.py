@@ -2,5 +2,5 @@
 
 Each kernel implements the semantics of one reference parser pipe
 (SURVEY.md §2.2) as a pure function ``(text, base_uri) -> (triples,
-errors)`` suitable for vectorized execution inside mapInPandas.
+errors)`` suitable for vectorized execution inside mapInArrow.
 """

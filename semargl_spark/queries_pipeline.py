@@ -19,6 +19,14 @@ from .operators.canon import connected_components
 from .operators.extract import extract_statements, triples
 from .operators.link import link_entities
 from .operators.serialize_ops import render_ntriples
+from .operators.sparql import (
+    concise_bounded_description,
+    sparql_ask,
+    sparql_construct,
+    sparql_describe,
+    sparql_select,
+    sparql_update,
+)
 from .sources.transcripts import (
     synth_transcripts,
     synth_transcripts_zipf,
@@ -111,21 +119,69 @@ def _drain(spark, q, key: str) -> None:
         pass
 
 
-def _docs(spark, sf_dir):
+# ------------------------------------------------- shared gate inputs
+
+
+def _seed_table(spark, sf_dir, name):
     from .spark_util import default_parallelism
 
     # the seed parquet is one small file → one input partition; spread it
-    # so the expression-heavy text operators use every core
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
+    # so the expression-heavy operators use every core
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet").repartition(
         default_parallelism(spark)
     )
 
 
-def _embeddings(spark, sf_dir):
-    from .spark_util import default_parallelism
+def _docs(spark, sf_dir):
+    return _seed_table(spark, sf_dir, "documents")
 
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        default_parallelism(spark)
+
+def _embeddings(spark, sf_dir):
+    return _seed_table(spark, sf_dir, "embeddings")
+
+
+def _vectors(spark, sf_dir):
+    """(vec_id, embedding as array<double>): the similarity operators'
+    input."""
+    return _embeddings(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def _near_dup_corpus(spark, sf_dir):
+    """(doc_id, text) documents unioned with a planted near-duplicate of
+    each: doc_id + 1,000,000, text + " tail"."""
+    docs = _docs(spark, sf_dir).select("doc_id", "text")
+    copies = docs.select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
+    )
+    return docs.unionByName(copies)
+
+
+def _corpus(spark, sf_dir, **kw):
+    """The statement stream every KG gate reads: the transcripts
+    (``kw`` goes to synth_transcripts: fmt, turns_per_doc) extracted
+    to triples."""
+    return triples(extract_statements(synth_transcripts(spark, sf_dir, **kw)))
+
+
+def _kg_edges(spark, sf_dir):
+    """The mixed-format corpus materialized as KG edges; the Spark side
+    of ``_KG_EDGES_SQL``."""
+    return materialize.kg_edges(_corpus(spark, sf_dir))
+
+
+def _knows_blocks(st):
+    """The canonicalize equivalence edges: knows edges with every 16th
+    chain link broken, so components are 16-id blocks, as distinct
+    (src, dst)."""
+    src_id = F.regexp_extract("subj", r"urn:e:(\d+)", 1).cast("long")
+    return (
+        st.filter(F.col("pred") == "urn:p:knows")
+        .filter(src_id % 16 != 15)
+        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
+        .distinct()
     )
 
 
@@ -158,8 +214,7 @@ FROM t
 
 
 def q_entity_link(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     return link_entities(st, entity_dictionary(spark, sf_dir)).select(
         "conv_id", "turn_idx", "mention_node", "canonical_iri",
         F.col("score").cast("double").alias("score"),
@@ -177,16 +232,8 @@ def q_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over knows-edges, chains broken every 16 ids
     so components have bounded diameter (the oracle computes the block
     structure in closed form)."""
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
-    knows = st.filter(F.col("pred") == "urn:p:knows")
-    src_id = F.regexp_extract("subj", r"urn:e:(\d+)", 1).cast("long")
-    edges = (
-        knows.filter(src_id % 16 != 15)
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-    )
-    return connected_components(edges)
+    st = _corpus(spark, sf_dir, fmt="ntriples")
+    return connected_components(_knows_blocks(st))
 
 
 ORACLES["canonicalize"] = """
@@ -207,16 +254,8 @@ def q_pipeline_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark-submit job): the synthetic dictionary maps mentions to their
     own IRIs, so links contribute no equivalences here — the knows graph
     supplies them instead."""
-    t = synth_transcripts(spark, sf_dir)
-    st = triples(extract_statements(t)).cache()
-    knows = st.filter(F.col("pred") == "urn:p:knows")
-    src_id = F.regexp_extract("subj", r"urn:e:(\d+)", 1).cast("long")
-    equiv = (
-        knows.filter(src_id % 16 != 15)
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-    )
-    components = connected_components(equiv)
+    st = _corpus(spark, sf_dir).cache()
+    components = connected_components(_knows_blocks(st))
     edges = materialize.kg_edges(st, components)
     st.unpersist()
     return edges
@@ -254,8 +293,7 @@ def q_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     for in-Spark self-consistency ledgers.)"""
     from .operators.dedup import md5_hash60
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     shard = F.pmod(
         F.regexp_extract("conv_id", r"(\d+)", 1).cast("long"), F.lit(32)
     ).cast("int")
@@ -332,8 +370,7 @@ def q_lineage_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only.)"""
     from .operators.dedup import md5_hash60
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     shard = F.pmod(
         F.regexp_extract("conv_id", r"(\d+)", 1).cast("long"), F.lit(8)
     )
@@ -392,14 +429,13 @@ def q_vocab_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     owl/rdfs synonym closure (reference J1)."""
     from .operators.vocab import expand_statements
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
     # expand_statements references the statements three times (original +
     # pred/obj synonym joins) — checkpoint so extraction runs once
     # (localCheckpoint, not persist: persist leaves the Python subtree
     # in every InMemoryRelation branch of the plan; the checkpoint
     # collapses them to one Scan ExistingRDD, which the registry
     # recompute audit can verify)
-    st = triples(extract_statements(t)).localCheckpoint(eager=False)
+    st = _corpus(spark, sf_dir, fmt="ntriples").localCheckpoint(eager=False)
     # deterministic synthetic vocabulary: urn:p:knows ≡ urn:p:acquaintedWith,
     # urn:p:name ⊑ urn:p:label2
     vocab = spark.createDataFrame(
@@ -446,9 +482,7 @@ SELECT conv_id, turn_idx, subj, 'urn:p:label2', obj, obj_kind, lang,
 
 
 def q_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = synth_transcripts(spark, sf_dir)
-    st = triples(extract_statements(t))
-    return materialize.kg_edges(st)
+    return _kg_edges(spark, sf_dir)
 
 
 ORACLES["kg_edges"] = """
@@ -484,8 +518,7 @@ def q_kg_bgp(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree (operators/bgp.py)."""
     from .operators.bgp import match_bgp
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp(
         edges,
         [
@@ -516,8 +549,7 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unrolled SQL oracle reproduces them digit-for-digit."""
     from .operators.graph import pagerank
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return pagerank(edges, iterations=5)
 
 
@@ -561,8 +593,7 @@ def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the scores are non-trivial."""
     from .operators.graph import hits
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return hits(edges, iterations=2)
 
 
@@ -593,8 +624,7 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any parallelism; the oracle unrolls the same 3 rounds."""
     from .operators.graph import kcore
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return kcore(edges, k=2, rounds=3)
 
 
@@ -632,8 +662,7 @@ def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     handling — the hub never fans out its wedges)."""
     from .operators.graph import triangle_counts
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return triangle_counts(edges)
 
 
@@ -658,8 +687,7 @@ def q_kg_bgp_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst filters pushed into the pattern scans."""
     from .operators.bgp import match_bgp_filter
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_filter(
         edges,
         [("?a", "urn:p:knows", "?b")],
@@ -685,8 +713,7 @@ def q_kg_node_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     the degree guard but still counts toward each node's degree."""
     from .operators.graph import node_jaccard
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return node_jaccard(edges, max_nbr_degree=64, min_permille=1)
 
 
@@ -717,8 +744,7 @@ def q_kg_bgp_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     does not match keep NULL in d (left-join semantics)."""
     from .operators.bgp import match_bgp_optional
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_optional(
         edges,
         [("?a", "urn:p:knows", "?b")],
@@ -741,8 +767,7 @@ def q_kg_bgp_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL for the first branch (bag semantics, no dedup)."""
     from .operators.bgp import match_bgp_union
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_union(
         edges,
         [
@@ -773,8 +798,7 @@ def q_kg_bgp_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation keyed by the (3-value) predicate variable."""
     from .operators.bgp import match_bgp_agg
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_agg(
         edges,
         [("?a", "urn:p:knows", "?b"), ("?b", "?p", "?c")],
@@ -799,8 +823,7 @@ def q_kg_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     one distinct (the output graph's set semantics)."""
     from .operators.bgp import construct
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return construct(
         edges,
         [("?a", "urn:p:knows", "?b"), ("?b", "urn:p:knows", "?c")],
@@ -935,12 +958,11 @@ def q_model_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bnode's label literal — exactly two rows per conversation."""
     from .operators.setops import model_diff
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
     # localCheckpoint instead of persist: both sides of the diff read
     # the statements twice, and the checkpointed RDD is reclaimed by the
     # ContextCleaner once the result is dropped (a plain persist would
     # pin executor storage for the session)
-    st = triples(extract_statements(t)).localCheckpoint(eager=False)
+    st = _corpus(spark, sf_dir, fmt="ntriples").localCheckpoint(eager=False)
     a = st.filter(F.col("turn_idx") == 0)
     b = st.filter(F.col("turn_idx") == 1)
     return model_diff(a, b, keys=["conv_id"])
@@ -1065,8 +1087,7 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     salt-invariant, so the oracle is the plain aggregate."""
     from .operators.skew import salted_agg
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     out = salted_agg(
         st.select("pred", "subj"),
         ["pred"],
@@ -1147,14 +1168,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each doc unioned with a lightly-perturbed copy). Uses the
     SQL-replicable md5 hash method so the DuckDB oracle recomputes the
     full shingle→minhash→band→verify pipeline exactly."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    copies = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    corpus = docs.unionByName(copies)
     return dedup.near_dedup_minhash(
-        corpus, threshold=0.5, hash_method="md5"
+        _near_dup_corpus(spark, sf_dir), threshold=0.5, hash_method="md5"
     ).select(
         F.col("doc_a").cast("long"), F.col("doc_b").cast("long"),
         F.round("jaccard", 6).alias("jaccard"),
@@ -1250,12 +1265,7 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     components over the duplicate graph → keep the min-id member per
     cluster → surviving corpus. The oracle recomputes the whole chain,
     closing the pair graph with a recursive CTE."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    copies = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    corpus = docs.unionByName(copies)
+    corpus = _near_dup_corpus(spark, sf_dir)
     pairs = dedup.near_dedup_minhash(corpus, threshold=0.5, hash_method="md5")
     return dedup.survivors(corpus, pairs).select(F.col("doc_id").cast("long"))
 
@@ -1283,12 +1293,7 @@ def q_dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen one. The survivor set is therefore the exact complement
     of the min-id gate's on every planted pair, which is what makes the
     two gates jointly discriminating."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    copies = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" tail")).alias("text"),
-    )
-    corpus = docs.unionByName(copies).withColumn(
+    corpus = _near_dup_corpus(spark, sf_dir).withColumn(
         "score", F.length("text").cast("long")
     )
     pairs = dedup.near_dedup_minhash(
@@ -1327,9 +1332,7 @@ SELECT doc_id FROM keep
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # double precision end-to-end so the DuckDB oracle's arithmetic matches
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     return similarity.brute_force_topk(emb, queries, k=5).select(
         F.col("query_id").cast("long"),
@@ -1357,9 +1360,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed ANN (scale path): deterministic coarse quantizer →
     narrow cell assignment → nprobe probing → top-k within probed
     cells. Exact DuckDB oracle mirrors the quantizer and tie-breaks."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     return similarity.ivf_topk(
         emb, queries, k=5, nprobe=2, centroid_every=50
@@ -1407,9 +1408,7 @@ def q_ann_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^12 vectors this sampled evaluation is the ONLY affordable recall
     monitor — the gate pins its bit-exact replayability (quantizer,
     probes, tie-breaks) rather than a recall threshold."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 20 == 1)
     truth = similarity.brute_force_topk(emb, queries, k=10).select(
         "query_id", "neighbor_id"
@@ -1477,9 +1476,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the signature with the same left-fold dot product, so bucket
     membership — the approximation itself — is value-checked, not just
     the final cosines."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
     return similarity.ann_topk(emb, queries, dim=64, k=5, n_planes=8).select(
         F.col("query_id").cast("long"),
@@ -1488,25 +1485,28 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_lsh_oracle() -> str:
-    """Mirror lsh_bucket: bit i set iff dot(v, plane_i) >= 0, where the
-    dot is the same left fold Spark's F.aggregate performs (0.0+p1==p1,
-    so list_reduce's first-element start is bit-identical)."""
-    planes = similarity._hyperplanes(64, 8, seed=42)
-    rows = ",\n".join(
-        f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH planes(pid, p) AS (VALUES
-{rows}),
+# The hyperplane-LSH oracle prefix (planes, e, b CTEs) mirroring
+# similarity.lsh_bucket: bit i set iff dot(v, plane_i) >= 0, where the
+# dot is the same left fold Spark's F.aggregate performs (0.0+p1==p1,
+# so list_reduce's first-element start is bit-identical). The planes
+# are the seeded hyperplanes inlined as literals.
+_LSH_PLANE_ROWS = ",\n".join(
+    f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
+    for i, p in enumerate(similarity._hyperplanes(64, 8, seed=42))
+)
+_LSH_BUCKETS_SQL = f"""planes(pid, p) AS (VALUES
+{_LSH_PLANE_ROWS}),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 b AS (SELECT e.vec_id,
         CAST(SUM(CASE WHEN list_reduce(
                list_transform(range(1, 65), j -> e.v[j] * planes.p[j]),
                (a, x) -> a + x) >= 0
              THEN (1 << pid) ELSE 0 END) AS INT) AS bucket
-      FROM e CROSS JOIN planes GROUP BY e.vec_id),
+      FROM e CROSS JOIN planes GROUP BY e.vec_id)"""
+
+
+ORACLES["ann_lsh"] = f"""
+WITH {_LSH_BUCKETS_SQL},
 q AS (SELECT b.vec_id AS query_id, b.bucket, e.v AS qvec
       FROM b JOIN e USING (vec_id) WHERE vec_id % 25 = 0),
 c AS (SELECT b.vec_id AS neighbor_id, b.bucket, e.v AS nvec
@@ -1524,18 +1524,15 @@ FROM ranked WHERE rn <= 5
 """
 
 
-ORACLES["ann_lsh"] = _ann_lsh_oracle()
-
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-NN similarity graph over the whole embedding
     corpus (LSH bucket equi-join, never all-pairs), symmetrized to
     undirected (src_id < dst_id) edges with the mutual-kNN flag —
     the edge list graph-based clustering and graph dedup start from."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    return similarity.knn_graph(emb, dim=64, k=3, n_planes=8).select(
+    return similarity.knn_graph(
+        _vectors(spark, sf_dir), dim=64, k=3, n_planes=8
+    ).select(
         F.col("src_id").cast("long"),
         F.col("dst_id").cast("long"),
         "cosine",
@@ -1543,27 +1540,13 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_graph_with() -> str:
-    """Shared WITH-prefix: hyperplane/bucket/top-k mirror (same recipe
-    as _ann_lsh_oracle) with every vector as a query, symmetrized to
-    (least, greatest) pairs in ``und`` — consumed by the knn_graph
-    oracle's final select and by the label-propagation oracle built on
-    the same edge set."""
-    planes = similarity._hyperplanes(64, 8, seed=42)
-    rows = ",\n".join(
-        f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH planes(pid, p) AS (VALUES
-{rows}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-b AS (SELECT e.vec_id,
-        CAST(SUM(CASE WHEN list_reduce(
-               list_transform(range(1, 65), j -> e.v[j] * planes.p[j]),
-               (a, x) -> a + x) >= 0
-             THEN (1 << pid) ELSE 0 END) AS INT) AS bucket
-      FROM e CROSS JOIN planes GROUP BY e.vec_id),
+# Shared WITH-prefix: hyperplane/bucket/top-k mirror (same recipe as
+# the ann_lsh oracle) with every vector as a query, symmetrized to
+# (least, greatest) pairs in ``und`` — consumed by the knn_graph
+# oracle's final select and by the label-propagation oracle built on
+# the same edge set.
+_KNN_GRAPH_WITH = f"""
+WITH {_LSH_BUCKETS_SQL},
 q AS (SELECT b.vec_id AS query_id, b.bucket, e.v AS qvec
       FROM b JOIN e USING (vec_id)),
 c AS (SELECT b.vec_id AS neighbor_id, b.bucket, e.v AS nvec
@@ -1583,15 +1566,12 @@ und AS (SELECT least(query_id, neighbor_id) AS src_id,
         FROM knn)"""
 
 
-def _knn_graph_oracle() -> str:
-    return _knn_graph_with() + """
+ORACLES["knn_graph"] = _KNN_GRAPH_WITH + """
 SELECT src_id, dst_id, max(cosine) AS cosine,
        COUNT(*) = 2 AS mutual
 FROM und GROUP BY src_id, dst_id
 """
 
-
-ORACLES["knn_graph"] = _knn_graph_oracle()
 
 
 def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1599,10 +1579,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ANN index storage layer): floor semantics so both engines'
     identical double expressions agree bit-for-bit; the int vector is
     CSV-joined for the cross-engine value hash."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    q = similarity.quantize_embeddings(emb, bits=8)
+    q = similarity.quantize_embeddings(_vectors(spark, sf_dir), bits=8)
     return q.select(
         F.col("vec_id").cast("long"),
         "scale_num",
@@ -1634,9 +1611,7 @@ def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ONE bucket equi-join, scored by the exact int dot a SIMD int8
     kernel computes — all-integer end to end, so the oracle matches
     bit-for-bit including ties."""
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     qz = similarity.quantize_embeddings(
         similarity.lsh_bucket(emb, "embedding", 64, 8)
     )
@@ -1648,26 +1623,12 @@ def q_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _quantized_topk_oracle() -> str:
-    """Hyperplane buckets + int8 quantization + integer dot, all
-    mirrored exactly (same plane literals and left-fold sign dots as
-    _ann_lsh_oracle; floor quantization as the embedding_quantize
-    oracle; BIGINT dot so the sum is exact)."""
-    planes = similarity._hyperplanes(64, 8, seed=42)
-    rows = ",\n".join(
-        f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH planes(pid, p) AS (VALUES
-{rows}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-b AS (SELECT e.vec_id,
-        CAST(SUM(CASE WHEN list_reduce(
-               list_transform(range(1, 65), j -> e.v[j] * planes.p[j]),
-               (a, x) -> a + x) >= 0
-             THEN (1 << pid) ELSE 0 END) AS INT) AS bucket
-      FROM e CROSS JOIN planes GROUP BY e.vec_id),
+# Hyperplane buckets + int8 quantization + integer dot, all mirrored
+# exactly (same plane literals and left-fold sign dots as the ann_lsh
+# oracle; floor quantization as the embedding_quantize oracle; BIGINT
+# dot so the sum is exact).
+ORACLES["quantized_topk"] = f"""
+WITH {_LSH_BUCKETS_SQL},
 m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx
       FROM e),
 qv AS (SELECT m.vec_id, b.bucket,
@@ -1692,8 +1653,6 @@ ranked AS (SELECT query_id, neighbor_id, dot,
 SELECT query_id, neighbor_id, dot FROM ranked WHERE rn <= 5
 """
 
-
-ORACLES["quantized_topk"] = _quantized_topk_oracle()
 
 
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1721,26 +1680,12 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _knn_classify_oracle() -> str:
-    """The quantized_topk recipe (planes, floor quantization, bucket
-    equi-join, dot-desc/neighbor-desc top-5) extended with the label
-    vote: per-query label counts, argmax with smaller-label tie-break,
-    joined back to the true label."""
-    planes = similarity._hyperplanes(64, 8, seed=42)
-    rows = ",\n".join(
-        f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH planes(pid, p) AS (VALUES
-{rows}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-b AS (SELECT e.vec_id,
-        CAST(SUM(CASE WHEN list_reduce(
-               list_transform(range(1, 65), j -> e.v[j] * planes.p[j]),
-               (a, x) -> a + x) >= 0
-             THEN (1 << pid) ELSE 0 END) AS INT) AS bucket
-      FROM e CROSS JOIN planes GROUP BY e.vec_id),
+# The quantized_topk recipe (planes, floor quantization, bucket
+# equi-join, dot-desc/neighbor-desc top-5) extended with the label
+# vote: per-query label counts, argmax with smaller-label tie-break,
+# joined back to the true label.
+ORACLES["knn_classify"] = f"""
+WITH {_LSH_BUCKETS_SQL},
 m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS mx
       FROM e),
 qv AS (SELECT m.vec_id, b.bucket,
@@ -1780,8 +1725,6 @@ WHERE p.pr = 1
 """
 
 
-ORACLES["knn_classify"] = _knn_classify_oracle()
-
 
 def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic clustering end to end: mutual-kNN edges over the
@@ -1791,12 +1734,9 @@ def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min member. The composition gate: similarity graph construction
     and iterative CC verified together against a recursive-closure
     oracle."""
-    from .operators.canon import connected_components
-
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    g = similarity.knn_graph(emb, dim=64, k=3, n_planes=8).filter("mutual")
+    g = similarity.knn_graph(
+        _vectors(spark, sf_dir), dim=64, k=3, n_planes=8
+    ).filter("mutual")
     edges = g.select(
         F.col("src_id").cast("string").alias("src"),
         F.col("dst_id").cast("string").alias("dst"),
@@ -1804,25 +1744,11 @@ def q_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(edges).select("node", "component")
 
 
-def _semantic_clusters_oracle() -> str:
-    """knn_graph's oracle CTEs restricted to mutual edges, closed by a
-    recursive reachability CTE; component = LEAST(self, min reachable)
-    on VARCHAR ids (the canonicalizer compares lexicographically)."""
-    planes = similarity._hyperplanes(64, 8, seed=42)
-    rows = ",\n".join(
-        f"  ({i}, [{', '.join(repr(x) for x in p)}]::DOUBLE[])"
-        for i, p in enumerate(planes)
-    )
-    return f"""
-WITH RECURSIVE planes(pid, p) AS (VALUES
-{rows}),
-e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-b AS (SELECT e.vec_id,
-        CAST(SUM(CASE WHEN list_reduce(
-               list_transform(range(1, 65), j -> e.v[j] * planes.p[j]),
-               (a, x) -> a + x) >= 0
-             THEN (1 << pid) ELSE 0 END) AS INT) AS bucket
-      FROM e CROSS JOIN planes GROUP BY e.vec_id),
+# knn_graph's oracle CTEs restricted to mutual edges, closed by a
+# recursive reachability CTE; component = LEAST(self, min reachable) on
+# VARCHAR ids (the canonicalizer compares lexicographically).
+ORACLES["semantic_clusters"] = f"""
+WITH RECURSIVE {_LSH_BUCKETS_SQL},
 q AS (SELECT b.vec_id AS query_id, b.bucket, e.v AS qvec
       FROM b JOIN e USING (vec_id)),
 c AS (SELECT b.vec_id AS neighbor_id, b.bucket, e.v AS nvec
@@ -1848,8 +1774,6 @@ SELECT s AS node, least(s, min(d)) AS component
 FROM reach GROUP BY s
 """
 
-
-ORACLES["semantic_clusters"] = _semantic_clusters_oracle()
 
 
 def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2512,7 +2436,7 @@ FROM documents
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column decode/frame-sample plumbing. The decoder is a
     deterministic sha256 fake, so the DuckDB oracle recomputes the
-    digest and the exact value gate applies to the full mapInPandas
+    digest and the exact value gate applies to the full mapInArrow
     plumbing (schema, fan-out, batch shape)."""
     from .operators import multimodal
 
@@ -2733,7 +2657,7 @@ FROM (
 def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming extraction (SURVEY.md §2.11): materialize the
     ntriples transcript corpus to a landing dir, drain it with
-    ``trigger(availableNow=True)`` through the same mapInPandas stage as
+    ``trigger(availableNow=True)`` through the same mapInArrow stage as
     batch (exactly-once via checkpoint), and return the sink table. The
     oracle is the batch extract_ntriples oracle — streaming and batch
     must agree exactly."""
@@ -2761,7 +2685,6 @@ def q_stream_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
     import uuid
 
-    from .operators.extract import extract_statements
     from .streaming.stateful import conversation_progress
     from .streaming.stream_extract import read_transcript_stream
 
@@ -2877,8 +2800,7 @@ def q_kg_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     SPARQL engines execute for ``p{1,k}`` and caps output at k·|E|."""
     from .operators.graph import bounded_paths
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return bounded_paths(edges, "urn:p:knows", max_hops=3)
 
 
@@ -2902,8 +2824,7 @@ def q_kg_path_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     that case is gated as the bounded ``kg_path`` query."""
     from .operators.graph import kleene_closure
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return kleene_closure(edges, "http://purl.org/dc/terms/relation")
 
 
@@ -2931,8 +2852,7 @@ def q_kg_wl_colors(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine."""
     from .operators.graph import wl_colors
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return wl_colors(edges, rounds=2)
 
 
@@ -2971,8 +2891,7 @@ def q_kg_literal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     kg_schema_summary's entity-side profile."""
     from .operators.graph import literal_stats
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    return literal_stats(triples(extract_statements(t)))
+    return literal_stats(_corpus(spark, sf_dir, fmt="ntriples"))
 
 
 ORACLES["kg_literal_stats"] = _SEED + r""",
@@ -3001,8 +2920,7 @@ def q_kg_schema_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     the graph) reads first."""
     from .operators.graph import schema_summary
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return schema_summary(edges)
 
 
@@ -3332,8 +3250,7 @@ def q_entity_link_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     fuzzy join recovers them)."""
     from .operators.link import fuzzy_link_entities
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     did = F.regexp_extract(F.col("mention_node"), r"urn:e:(\d+)", 1).cast(
         "long"
     )
@@ -3704,8 +3621,7 @@ def q_kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     celebrity hubs (skew planning input for canonicalization) and
     predicate cardinality classes (1:1 vs 1:N vs M:N). Two hash
     aggregates over the edge table; the distincts are exact."""
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     out_deg = edges.groupBy("pred", "src").agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -4012,8 +3928,7 @@ def q_kg_node_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ORDER BY node)``'s single-partition sort at 10^9+ nodes."""
     from .operators.graph import node_index
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return node_index(edges, n_buckets=64)
 
 
@@ -4041,8 +3956,7 @@ def q_kg_neg_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     training-pair generator for KG-embedding jobs."""
     from .operators.graph import negative_samples
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return negative_samples(edges, k=2)
 
 
@@ -4070,8 +3984,7 @@ def q_kg_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row subquery."""
     from .operators.bgp import match_bgp_minus
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_minus(
         edges,
         [("?a", "urn:p:knows", "?b")],
@@ -4095,8 +4008,7 @@ def q_kg_bgp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-task k-row heaps, driver merge) — no global sort."""
     from .operators.bgp import match_bgp_topk
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return match_bgp_topk(
         edges,
         [("?a", "urn:p:knows", "?b"),
@@ -4120,8 +4032,7 @@ def q_kg_path_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     front, then the same semi-naive bounded closure as kg_path."""
     from .operators.graph import bounded_paths_alt
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return bounded_paths_alt(
         edges, ["urn:p:knows"], max_hops=2,
         inverse_preds=["http://purl.org/dc/terms/relation"],
@@ -4148,7 +4059,7 @@ def q_kg_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     knows graph — community detection with a fully unrolled SQL oracle."""
     from .operators.graph import label_propagation
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     knows = st.filter(F.col("pred") == "urn:p:knows").select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     )
@@ -4185,16 +4096,8 @@ def q_kg_component_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph → (size, n_components): the shape report a 10^12-node CC run
     is judged by (one giant component = a linking bug), computed with
     two hash aggregations over the (node, component) table."""
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
-    knows = st.filter(F.col("pred") == "urn:p:knows")
-    src_id = F.regexp_extract("subj", r"urn:e:(\d+)", 1).cast("long")
-    edges = (
-        knows.filter(src_id % 16 != 15)
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-    )
-    comp = connected_components(edges)
+    st = _corpus(spark, sf_dir, fmt="ntriples")
+    comp = connected_components(_knows_blocks(st))
     return (
         comp.groupBy("component")
         .agg(F.count("*").alias("size"))
@@ -4227,7 +4130,7 @@ def q_kg_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/validate.py; three relational steps, no per-row Python)."""
     from .operators.validate import validate_shapes
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     # each shape rule joins the statement set; checkpoint so the
     # extraction kernel runs once (8 Python subtrees observed without)
     g = (
@@ -4451,7 +4354,7 @@ def q_kg_rdfs_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
         rdfs_infer,
     )
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     # checkpoint the computed statement set: each rule is one join
     # against it, and without this the extraction kernel re-runs per
     # rule (8 Python subtrees observed). Parquet-backed callers should
@@ -4563,21 +4466,15 @@ def q_canonicalize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-wide super-blocks."""
     from .operators.canon import cc_incremental
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     knows = st.filter(F.col("pred") == "urn:p:knows")
     src_id = F.regexp_extract("subj", r"urn:e:(\d+)", 1).cast("long")
-    old_edges = (
-        knows.filter(src_id % 16 != 15)
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-        .distinct()
-    )
     bridges = (
         knows.filter((src_id % 16 == 15) & ((src_id / 16).cast("long") % 4 != 3))
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .distinct()
     )
-    comp0 = connected_components(old_edges)
+    comp0 = connected_components(_knows_blocks(st))
     return cc_incremental(comp0, bridges)
 
 
@@ -4605,7 +4502,7 @@ def q_kg_neighbor_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer means, exact at any parallelism."""
     from .operators.graph import neighbor_agg
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     knows = st.filter(F.col("pred") == "urn:p:knows").select(
         F.col("subj").alias("src"), F.col("obj").alias("dst")
     ).distinct()
@@ -4639,7 +4536,7 @@ def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer merging everything into one cluster."""
     from .operators.graph import label_propagation, modularity
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     # the knows edge list feeds BOTH label propagation and the
     # modularity score; checkpoint so extraction runs once
     knows = st.filter(F.col("pred") == "urn:p:knows").select(
@@ -4691,8 +4588,7 @@ def q_kg_adjacency(spark: SparkSession, sf_dir: str) -> DataFrame:
     serialization so hubs cannot hit the single-row ceiling."""
     from .operators.graph import adjacency_export
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return adjacency_export(edges, cap=32)
 
 
@@ -4787,8 +4683,7 @@ def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds (operators/graph.personalized_pagerank)."""
     from .operators.graph import personalized_pagerank
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return personalized_pagerank(
         edges, seeds=["urn:e:0", "urn:e:100"], iterations=5
     )
@@ -4990,7 +4885,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, proving the salt spreads without changing semantics."""
     from .operators.skew import salted_join
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir, fmt="ntriples")))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     dim = spark.createDataFrame(
         [("urn:p:name", "label"), ("urn:p:knows", "relation"),
          ("urn:p:score", "metric"), ("urn:p:label", "label")],
@@ -5024,7 +4919,7 @@ def q_kg_entity_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     type count, sorted type list, and out-degree — conditional
     aggregation over one pass of the statement set (the serving-layer
     projection a KG front-end reads)."""
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
+    st = _corpus(spark, sf_dir)
     g = st.select("subj", "pred", "obj").distinct()
     return (
         g.filter(F.col("subj").startswith("urn:e:"))
@@ -5214,9 +5109,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wl).cast("long").alias("rank"),
     )
 
-    emb = _embeddings(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     qz = similarity.quantize_embeddings(emb)
     qa = qz.filter(F.col("vec_id") == 7).select(F.col("qvec").alias("qa"))
     cand = qz.filter(F.col("vec_id") != 7).select(
@@ -5358,10 +5251,7 @@ def q_kg_sparql(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT with FILTER, ORDER BY, LIMIT — parsed on the driver
     (operators/sparql.py) and compiled onto the same Catalyst join tree
     the list-based BGP API produces."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dc: <http://purl.org/dc/terms/>
@@ -5390,10 +5280,7 @@ def q_kg_sparql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL GROUP BY aggregates from query TEXT (COUNT(*) +
     COUNT(DISTINCT)) — parsed and compiled onto the same
     map-side-partial hash aggregation as the list-based API."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?p (COUNT(*) AS ?n) (COUNT(DISTINCT ?b) AS ?n_targets)
@@ -5415,10 +5302,7 @@ def q_kg_sparql_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverse edges) from a filtered two-hop pattern. Compiles to one BGP
     join tree fanned out through a shuffle-free Union of template
     projections and a single set-semantics distinct."""
-    from .operators.sparql import sparql_construct
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_construct(edges, """
         PREFIX p: <urn:p:>
         PREFIX dc: <http://purl.org/dc/terms/>
@@ -5448,10 +5332,7 @@ def q_kg_sparql_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the solution as a broadcast equi-join (query-text-sized by
     construction — the canonical way to pin a variable to a short list
     without a second scan)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?a ?p ?c WHERE {
@@ -5476,10 +5357,7 @@ def q_kg_sparql_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     the predicate position and compiled onto the same semi-naive
     bounded minimum-hop closure as the list-level kg_path gate — the
     front-end refuses unbounded ``+`` beyond its explicit hop cap."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?x ?y ?hops WHERE { ?x p:knows{1,3} ?y . }
@@ -5499,10 +5377,7 @@ def q_kg_sparql_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics-ordered hash-join tree any 3-pattern BGP gets, so the
     sugar adds zero new shuffle machinery. Reference n/a (query-surface
     operator over the constructed KG)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dcterms: <http://purl.org/dc/terms/>
@@ -5533,10 +5408,7 @@ def q_kg_sparql_nps(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, no join, the filters land in the parquet scan's
     PushedFilters at any scale. Reference n/a (query-surface
     operator)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX rdf: <http://www.w3.org/1999/02/22-rdf-syntax-ns#>
@@ -5559,10 +5431,7 @@ def q_kg_sparql_path_zero(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure blow-up) and re-minimized per pair in a single hash
     aggregation. ``p:knows*``/``p:knows?`` ride the same code path
     (star takes the engine's explicit max_hops bound)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?x ?y ?hops WHERE { ?x p:knows{0,2} ?y . }
@@ -5587,10 +5456,7 @@ def q_kg_sparql_ask(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing the set. Gated as a one-row frame with a positive and
     a negative probe so BOTH outcomes are oracle-checked (EXISTS
     mirrors in SQL)."""
-    from .operators.sparql import sparql_ask
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     pos = sparql_ask(edges, """
         PREFIX p: <urn:p:>
         PREFIX t: <urn:t:>
@@ -5627,8 +5493,7 @@ def q_kg_reach_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     set-semantics CTE restricted to the seeds."""
     from .operators.graph import kleene_closure
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     seeds = (
         edges.filter(F.col("pred") == "http://purl.org/dc/terms/relation")
         .select(F.col("src").alias("node"))
@@ -5662,10 +5527,7 @@ def q_kg_sparql_optional_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     padding, which a post-join WHERE would wrongly drop. Over
     group-bound variables the engine prunes the group BEFORE the join
     shuffle (bgp.match_bgp_optional group_filters)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dcterms: <http://purl.org/dc/terms/>
@@ -5691,10 +5553,7 @@ def q_kg_sparql_agg_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     LeftJoin solution — SPARQL count semantics skip the NULL padding,
     so non-matching targets report 0. One left join feeding one hash
     aggregation with map-side partials."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dcterms: <http://purl.org/dc/terms/>
@@ -5722,10 +5581,7 @@ def q_kg_sparql_neg_fail(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound() translates to IS NOT NULL, so the plan is a left join
     probed for null padding (the same anti-join shape MINUS compiles
     to, reached through the 1.0 idiom instead)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dcterms: <http://purl.org/dc/terms/>
@@ -5754,10 +5610,7 @@ def q_kg_sparql_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot) — and OFFSET without ORDER BY raises rather than returning
     an arbitrary slice. Plan: TakeOrderedAndProject-style top-(k+n)
     then skip, never a global sort materialization."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?a ?b WHERE { ?a p:knows ?b . }
@@ -5781,10 +5634,9 @@ def q_kg_comention(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-turn NTriples corpus mentions {e:did, e:did+1} per conversation."""
     from .operators.graph import comention_edges
 
-    st = triples(extract_statements(
-        synth_transcripts(spark, sf_dir, turns_per_doc=8, fmt="ntriples")
-    ))
-    return comention_edges(st)
+    return comention_edges(
+        _corpus(spark, sf_dir, turns_per_doc=8, fmt="ntriples")
+    )
 
 
 ORACLES["kg_comention"] = """
@@ -5801,10 +5653,7 @@ def q_kg_sparql_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate aliases plus ORDER BY/LIMIT solution modifiers on the
     aggregated result — one hash aggregation, the HAVING predicate
     applied to the partial-merged rows (never re-scanning)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         SELECT ?p (COUNT(*) AS ?n) WHERE { ?a ?p ?b . }
         GROUP BY ?p HAVING(?n >= 100) ORDER BY DESC(?n) ?p LIMIT 20
@@ -5822,10 +5671,7 @@ def q_kg_sparql_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPARQL DESCRIBE from query TEXT: every edge touching the named
     resources — a single scan with In-filters pushed on both endpoint
     columns, no join."""
-    from .operators.sparql import sparql_describe
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_describe(edges, """
         PREFIX e: <urn:e:>
         DESCRIBE e:1 e:2 e:3
@@ -5876,9 +5722,7 @@ def q_kg_sparql_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     named-graph matching with the graph bound as a variable —
     default-graph quads (NULL graph) never bind it. RDF dataset set
     semantics via one distinct on the quad projection."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir, fmt="nquads")))
+    st = _corpus(spark, sf_dir, fmt="nquads")
     quads = st.select(
         F.col("subj").alias("src"), "pred", F.col("obj").alias("dst"), "graph"
     ).distinct()
@@ -5899,10 +5743,7 @@ def q_kg_sparql_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one left-anti hash join keyed on the shared variable — never a
     per-row subquery; the sub-group is projected onto the shared
     columns before the join so the probe side stays narrow."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         PREFIX dc: <http://purl.org/dc/terms/>
@@ -5933,10 +5774,7 @@ def q_kg_sparql_bind(spark: SparkSession, sf_dir: str) -> DataFrame:
     column is a row-local Catalyst projection (no shuffle), and
     DISTINCT is one map-side-partial hash aggregation over the already
     projection-narrowed solution."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT DISTINCT ?p ?tag WHERE {
@@ -5960,10 +5798,7 @@ def q_kg_sparql_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     projected shared variable. The subquery is REDUCED (one map-side-
     partial groupBy) before the join — AQE broadcasts the aggregated
     side, so the outer scan is touched once."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         PREFIX p: <urn:p:>
         SELECT ?a ?b ?n WHERE {
@@ -6019,10 +5854,7 @@ def q_kg_sparql_agg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the filter scopes to the group pattern (pre-aggregation, pushed
     into the scan by Catalyst), distinct from HAVING which scopes to
     the aggregated result."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         SELECT ?p (COUNT(*) AS ?n) WHERE {
             ?a ?p ?b . FILTER(strstarts(?b, "urn:e:1"))
@@ -6042,10 +5874,7 @@ def q_kg_sparql_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     defined; this engine sorts elements and takes min() so both are
     pure functions of the group — deterministic at any parallelism,
     which a gated pipeline requires."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         SELECT ?b (GROUP_CONCAT(DISTINCT ?p; SEPARATOR="|") AS ?preds)
                   (SAMPLE(?a) AS ?first_src) (COUNT(*) AS ?n)
@@ -6068,10 +5897,7 @@ def q_kg_sparql_describe_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     solution is kept via two left-semi hash joins (src side, dst side)
     against the distinct-reduced solution set — never a per-row
     subquery; AQE broadcasts the solution when small."""
-    from .operators.sparql import sparql_describe
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_describe(edges, """
         PREFIX p: <urn:p:>
         DESCRIBE ?x WHERE {
@@ -6099,8 +5925,7 @@ def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes×walks regardless of edge count."""
     from .operators.graph import random_walks
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return random_walks(edges, walk_len=3, walks_per_node=2)
 
 
@@ -6144,8 +5969,7 @@ def q_kg_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pair aggregation."""
     from .operators.graph import random_walks, skipgram_pairs
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return skipgram_pairs(random_walks(edges, walk_len=3, walks_per_node=2),
                           window=2)
 
@@ -6225,10 +6049,7 @@ def q_kg_sparql_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATA) returning the updated edge set — deletes as left-anti hash
     joins, inserts as a union closed by one distinct, both Modify
     templates instantiated against the pre-update state."""
-    from .operators.sparql import sparql_update
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_update(edges, """
         PREFIX p: <urn:p:>
         DELETE { ?a p:knows ?b }
@@ -6450,8 +6271,7 @@ def q_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the chain, QuadSink.java; here it is a first-class column).
     One hash aggregation on the graph key with map-side partials and
     two-phase exact distincts; output is graph-vocabulary-sized."""
-    t = synth_transcripts(spark, sf_dir, fmt="nquads")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="nquads")
     g = F.coalesce(F.col("graph"), F.lit("urn:default"))
     return st.groupBy(g.alias("graph")).agg(
         F.count("*").cast("long").alias("n_statements"),
@@ -6486,10 +6306,7 @@ def q_kg_sparql_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     alongside a plain COUNT in one GROUP BY — compiles to Spark's
     two-phase partial-distinct aggregate (the distinct never funnels a
     predicate's edges through one reducer)."""
-    from .operators.sparql import sparql_select
-
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return sparql_select(edges, """
         SELECT ?p (COUNT(DISTINCT ?a) AS ?nsrc) (COUNT(*) AS ?n)
         WHERE { ?a ?p ?b . } GROUP BY ?p ORDER BY ?p
@@ -6790,8 +6607,7 @@ def q_kg_cardinality_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise the order-statistics estimator."""
     from .operators.sketch import kmv_distinct
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     sk = kmv_distinct(edges, ["pred"], "dst", k=64)
     exact = edges.groupBy("pred").agg(
         F.countDistinct("dst").cast("long").alias("n_exact")
@@ -7013,8 +6829,7 @@ def q_kg_neighborhood_anf(spark: SparkSession, sf_dir: str) -> DataFrame:
     diameter reads off where est_reach plateaus."""
     from .operators.sketch import neighborhood_function
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return neighborhood_function(edges, rounds=3, k=16)
 
 
@@ -7330,8 +7145,7 @@ def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability self-join + pointer-jumping CC."""
     from .operators.graph import scc_bounded
 
-    t = synth_transcripts(spark, sf_dir, fmt="ntriples")
-    st = triples(extract_statements(t))
+    st = _corpus(spark, sf_dir, fmt="ntriples")
     knows = (
         st.filter(F.col("pred") == "urn:p:knows")
         .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
@@ -7684,8 +7498,7 @@ def q_kg_quotient(spark: SparkSession, sf_dir: str) -> DataFrame:
     explored through."""
     from .operators.graph import quotient_graph, wl_colors
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st).localCheckpoint(eager=False)
+    edges = _kg_edges(spark, sf_dir).localCheckpoint(eager=False)
     return quotient_graph(edges, wl_colors(edges, rounds=2))
 
 
@@ -8316,7 +8129,6 @@ def q_chat_render(spark: SparkSession, sf_dir: str) -> DataFrame:
     the transcripts→pretraining-text exit the packing and
     context-window stages consume."""
     from .operators.conversation import chat_render
-    from .sources.transcripts import synth_transcripts
 
     return chat_render(synth_transcripts(spark, sf_dir, fmt="text"))
 
@@ -8440,7 +8252,6 @@ def q_conv_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the full chain, so candidate generation (which
     bands fire) is value-checked, not just the verified survivors."""
     from .operators.dedup import conv_near_dups
-    from .sources.transcripts import synth_transcripts
 
     t = synth_transcripts(spark, sf_dir, turns_per_doc=8, fmt="text")
     forked = t.withColumn(
@@ -8535,7 +8346,6 @@ def q_pipeline_sft(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.conversation import chat_render
     from .operators.curation import pack_sequences
     from .operators.dedup import conv_near_dups, survivors
-    from .sources.transcripts import synth_transcripts
 
     t = synth_transcripts(spark, sf_dir, fmt="text")
     replay = t.withColumn(
@@ -8604,8 +8414,7 @@ def q_kg_node2vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership join included."""
     from .operators.graph import node2vec_walks
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     # symmetrize entity-entity edges only: reversing the rdf:type edges
     # would hand urn:t:Thing a corpus-sized out-degree and every walk
     # parked there a |corpus| candidate fan-out per hop (measured 20x
@@ -8869,7 +8678,7 @@ def q_embedding_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embedding_label_prop_oracle() -> str:
-    return _knn_graph_with() + """,
+    return _KNN_GRAPH_WITH + """,
 g AS (SELECT DISTINCT a, b FROM (
         SELECT src_id AS a, dst_id AS b FROM und
         UNION ALL SELECT dst_id, src_id FROM und)),
@@ -9089,8 +8898,7 @@ def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly stronger than k-core."""
     from .operators.graph import ktruss
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     return ktruss(edges, k=3, rounds=2)
 
 
@@ -9282,8 +9090,6 @@ def q_kg_sparql_cbd(spark: SparkSession, sf_dir: str) -> DataFrame:
     values: described entities pull their literal/IRI statements plus
     the transitive closure through blank-node objects (address → geo
     chains), the spec-faithful DESCRIBE for raw extraction output."""
-    from .operators.sparql import concise_bounded_description
-
     d = _fusion_docs(spark, sf_dir)
     did = F.col("did")
     e = F.concat(F.lit("urn:e:"), did)
@@ -10048,8 +9854,7 @@ def q_kg_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.bucketing import read_bucketed, write_bucketed
 
-    st = triples(extract_statements(synth_transcripts(spark, sf_dir)))
-    edges = materialize.kg_edges(st)
+    edges = _kg_edges(spark, sf_dir)
     tag = uuid.uuid4().hex[:8]
     base = tempfile.mkdtemp(prefix="semargl_q_bj_")
     write_bucketed(edges, f"q_bj_{tag}", f"{base}/edges", key="src", buckets=16)
@@ -11446,7 +11251,6 @@ def q_dedup_regenerations(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the near twins' earlier members dropped; the oracle replays
     the Levenshtein verdict AND the anti-join."""
     from .operators.conversation import dedup_regenerations
-    from .sources.transcripts import synth_transcripts
 
     t = synth_transcripts(spark, sf_dir, turns_per_doc=8)
     did = F.substring("conv_id", 2, 18).cast("int")

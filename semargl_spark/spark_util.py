@@ -3,7 +3,7 @@
 ``ensure_py_files`` makes the ``semargl_spark`` package importable on
 executor Python workers regardless of the driver's cwd — the programmatic
 equivalent of ``spark-submit --py-files semargl_spark.zip`` (north_rule
-packaging). Without it, ``mapInPandas`` closures that reference kernel
+packaging). Without it, ``mapInArrow`` closures that reference kernel
 modules fail to unpickle on workers launched outside the repo root.
 """
 

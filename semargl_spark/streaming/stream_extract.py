@@ -3,7 +3,7 @@
 The reference is a *streaming parser* (incremental within a document),
 not a stream processor — so cross-document streaming semantics are free
 for us to define: each micro-batch of transcript turns flows through
-the same ``mapInPandas`` extraction used in batch (the stage is
+the same ``mapInArrow`` extraction used in batch (the stage is
 stateless per turn, so it is trivially valid under Structured
 Streaming), with exactly-once sink semantics via checkpointing.
 

@@ -6,7 +6,7 @@ trainer schedules one distributed collapse regardless of budget.
 Runs text.bpe_train (loop) at a moderate budget and
 text.bpe_train_batched at a production-ish (>=2k) budget, counting
 scheduled jobs per trainer via job groups, and writes
-BENCH/bpe_batched.json.
+BENCH/bpe_batched.json (cited by BENCH/BASELINE.md §5).
 
 The corpus is synthesized deterministically (md5-derived hex words,
 ~30k distinct, 1.6M tokens): the sf documents table's vocabulary
@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -97,8 +98,7 @@ def main() -> int:
             "differential)."
         ),
     }
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/bpe_batched.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "bpe_batched.json"), "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
     spark.stop()

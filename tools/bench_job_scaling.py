@@ -17,7 +17,11 @@ stages. Methodology mirrors bench_scaling.py: storage-resident input
 materialized once, interleaved levels (low, high, low, high),
 best-of-K per level, steal sampled around every trial.
 
-Usage: python tools/bench_job_scaling.py [sf_dir] [turns_per_doc] [N] [K]
+Prints one JSON line: the BENCH/job_scaling.json that BENCH/BASELINE.md
+§3 ("Full-job scaling through the spark-submit surface") cites.
+
+Usage: python tools/bench_job_scaling.py [sf_dir] [turns_per_doc] [N] [K] \
+    > BENCH/job_scaling.json
 """
 
 from __future__ import annotations

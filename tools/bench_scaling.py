@@ -24,6 +24,9 @@ Methodology (round 2 rework):
   would bias the ratio. Steal time is still sampled around every trial
   so hypervisor contamination stays visible in the record.
 
+Writes BENCH/scaling.json, the figure BENCH/BASELINE.md §3 and §9e
+cite.
+
 Usage: python tools/bench_scaling.py [sf_dir] [turns_per_doc] [N]
 """
 

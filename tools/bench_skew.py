@@ -2,7 +2,8 @@
 """Uniform-vs-zipf wall-clock pairs (VERDICT r3 item 7): the skew gates
 verify CORRECTNESS on zipf corpora at sf0.01; this measures that the
 skew-shaped inputs do not blow up WALL CLOCK at sf0.1 either, writing
-BENCH/skew_pairs.json with per-pair seconds and the zipf/uniform ratio.
+BENCH/skew_pairs.json with per-pair seconds and the zipf/uniform ratio
+(cited by BENCH/BASELINE.md §6).
 
 Usage: python tools/bench_skew.py [sf_dir]
 """
@@ -12,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
@@ -57,8 +59,7 @@ def main() -> int:
             "zipf_over_uniform": round(st / ut, 2) if ut else None,
         }
         print(uniform, out["pairs"][uniform])
-    os.makedirs("BENCH", exist_ok=True)
-    with open("BENCH/skew_pairs.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "skew_pairs.json"), "w") as f:
         json.dump(out, f, indent=2)
     print(json.dumps(out))
     spark.stop()

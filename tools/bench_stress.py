@@ -15,6 +15,8 @@ Usage:
     python tools/bench_stress.py [--scale 1.0] [--out BENCH/stress.json]
 
 ``--scale 0.01`` runs the same shapes at 1/100 size for a smoke pass.
+The default ``--out`` is the repo's BENCH/stress.json, cited by
+BENCH/BASELINE.md §3b.
 Corpora are synthesized executor-side (closed forms of spark.range) —
 nothing is collected to the driver.
 """
@@ -28,7 +30,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -126,7 +129,9 @@ class RestMetrics:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--scale", type=float, default=1.0)
-    ap.add_argument("--out", default="BENCH/stress.json")
+    ap.add_argument(
+        "--out", default=os.path.join(REPO, "BENCH", "stress.json")
+    )
     ap.add_argument("--cpus", type=int,
                     default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--sf-dir", default=os.environ.get(

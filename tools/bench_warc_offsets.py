@@ -12,7 +12,9 @@ per record, the Common Crawl layout), then times
 
 Both sides run the same terminal aggregate (count + sum of body
 lengths) so the decode work is identical and nothing is collected.
-Writes BENCH/warc_offsets.json.
+Writes BENCH/warc_offsets.json (``--random-filler``:
+warc_offsets_large.json; ``--downstream`` adds a _downstream suffix),
+the BENCH/warc_offsets*.json that BENCH/BASELINE.md §9c cites.
 
 Usage: python tools/bench_warc_offsets.py [--records 300000] [--cpus 32]
 """
