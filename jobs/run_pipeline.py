@@ -113,7 +113,13 @@ def main(argv=None) -> int:
 
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.builder.appName("semargl-kg-pipeline").getOrCreate()
+    from semargl_spark.spark_util import SESSION_DEFAULTS
+
+    spark = (
+        SparkSession.builder.appName("semargl-kg-pipeline")
+        .config(map=SESSION_DEFAULTS)
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("WARN")
     summary = run(spark, **vars(args))
     print(json.dumps(summary))

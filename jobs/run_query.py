@@ -60,19 +60,15 @@ def main() -> int:
                           f"{len(registry)} available (--list)"}))
         return 2
 
-    # spark-submit owns the master; apply the same scale-oriented
-    # configs tuned_session uses without overriding it
+    # spark-submit owns the master; apply the session defaults
+    # tuned_session uses without overriding it
     from pyspark.sql import SparkSession
 
-    from semargl_spark.spark_util import ensure_py_files
+    from semargl_spark.spark_util import SESSION_DEFAULTS, ensure_py_files
 
     spark = (
         SparkSession.builder.appName(f"run-query-{args.query}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
+        .config(map=SESSION_DEFAULTS)
         .getOrCreate()
     )
     ensure_py_files(spark)

@@ -537,43 +537,46 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
     text_col="text",
+    min_count: int = 1,
+    max_words: int | None = None,
 ) -> DataFrame:
-    """Full iterative BPE tokenizer training (subword-nmt semantics) →
-    the ordered merge table (step, pair, merged, n): per round, the
-    most frequent adjacent symbol pair over the corpus (frequency
-    desc, pair asc tie-break) is merged into one symbol everywhere,
-    exactly as ``learn_bpe`` does — pair statistics count every
-    adjacent position (overlaps included: [a,a,a] counts (a,a) twice)
-    while the merge itself is greedy left-to-right non-overlapping
-    ([a,a,a] → [aa, a]), matching subword-nmt's zero-width-boundary
-    ``re.sub``.
+    """Full BPE tokenizer training (subword-nmt semantics) → the
+    ordered merge table (step, pair, merged, n): per round, the most
+    frequent adjacent symbol pair over the corpus (frequency desc, pair
+    asc tie-break) is merged into one symbol everywhere, exactly as
+    ``learn_bpe`` does — pair statistics count every adjacent position
+    (overlaps included: [a,a,a] counts (a,a) twice) while the merge
+    itself is greedy left-to-right non-overlapping ([a,a,a] → [aa, a]),
+    matching subword-nmt's zero-width-boundary ``re.sub``. Words are
+    restricted to ``[a-z0-9]+`` so char splitting and binary collation
+    agree across engines.
 
-    Scale shape (the reason distributed BPE training is feasible at
-    10^12 tokens): the corpus collapses to a word-frequency table ONCE
-    (the only corpus-sized shuffle); every merge round then runs over
-    the *vocabulary* (~10^7–10^8 rows at web scale), as (1) a
-    vocabulary-sized pair groupBy with map-side partials and a
-    1-row TakeOrderedAndProject argmax — O(1) driver state per round,
-    like canon.py's convergence fingerprint — and (2) a shuffle-free
-    JVM higher-order fold (``aggregate`` over the symbol array, whole-
-    stage codegen, no Python) applying the merge. The vocabulary is
-    ``localCheckpoint``-ed per round so the iterative plan stays flat.
-
-    The greedy merge is a string fold over symbols: append each symbol,
-    or — when the accumulated tail symbol equals the pair's left and
-    the incoming symbol equals its right — concatenate instead. A
-    just-merged symbol can never re-match as the left side (merged =
-    left||right ≠ left since right is non-empty), so the fold is exactly
-    the left-to-right scan. Words are restricted to ``[a-z0-9]+`` so
-    char splitting and binary collation agree across engines.
+    Scale shape: BPE training is a function of the word-FREQUENCY table
+    only (vocabulary-sized — ~10^6–10^8 rows at web scale vs a 10^12-row
+    corpus), so the corpus collapses to that table in ONE distributed
+    aggregation (map-side partials), the table comes to the driver, and
+    the rounds run there over an incrementally maintained pair index
+    and a lazy max-heap (:func:`_fast_bpe_merges`). The Spark job count
+    is independent of ``n_merges``: a production budget of 32k–100k
+    merges is thousands of rounds, which a per-round Spark loop (about
+    three scheduled jobs per merge — BENCH/bpe_batched.json) cannot
+    run. The driver holds only the vocabulary, and ``min_count`` /
+    ``max_words`` bound it (standard practice — HF trainers expose
+    min_frequency); the truncation is deterministic (c desc, word asc),
+    and both default to exact. The one regime a per-round Spark loop
+    would win — a vocabulary too large for the driver at a tiny merge
+    budget — has no caller; :func:`bpe_pair_counts` still gives the
+    first round's statistics fully distributed.
 
     Reference parity: the reference (a parser framework) has no
     tokenizer training; target-side surface for the documents table.
-    One-round pair statistics: :func:`bpe_pair_counts`.
     """
-    spark = docs.sparkSession
-    _, merges = _bpe_loop(docs, n_merges, text_col)
-    return spark.createDataFrame(
+    if n_merges < 1:
+        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
+    merges = _fast_bpe_merges(
+        _collect_word_freq(docs, text_col, min_count, max_words), n_merges
+    )
+    return docs.sparkSession.createDataFrame(
         merges, "step int, pair string, merged string, n long"
     )
 
@@ -589,81 +592,25 @@ def bpe_segment(
     (space-joined) and subword count, plus the word's corpus frequency.
     ``n_subwords/c``-weighted averages give tokenizer fertility, the
     metric that decides whether a merge budget is large enough for a
-    corpus. Same scale shape as training: everything after the one
-    corpus→vocabulary collapse is vocabulary-sized, and segmenting NEW
-    text is a broadcast join of its words against this table.
+    corpus. The rows are the trainer's own final symbol state, so
+    training and segmenting are one pass; segmenting NEW text is a
+    broadcast join of its words against this table.
     """
-    vocab, _ = _bpe_loop(docs, n_merges, text_col)
-    return vocab.select(
-        F.regexp_replace("s", " ", "").alias("word"),
-        F.col("s").alias("segmented"),
-        F.size(F.split("s", " ")).cast("int").alias("n_subwords"),
-        F.col("c").cast("long").alias("c"),
-    )
-
-
-def _bpe_loop(
-    docs: DataFrame, n_merges: int, text_col: str
-) -> tuple[DataFrame, list[tuple[int, str, str, int]]]:
-    """Shared BPE training loop: (final segmented vocabulary, merges)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    wf = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
-        .filter(F.col("word").rlike("^[a-z0-9]+$") & (F.length("word") >= 2))
-        .groupBy("word")
-        .agg(F.count("*").alias("c"))
+    words = _collect_word_freq(docs, text_col, 1, None)
+    st = _PairStats(words)
+    _bpe_rounds(st, n_merges)
+    return docs.sparkSession.createDataFrame(
+        [(w, " ".join(s), len(s), c) for (w, c), s in zip(words, st.syms)],
+        "word string, segmented string, n_subwords int, c long",
     )
-    # symbol string: chars joined by single spaces ('abc' -> 'a b c')
-    vocab = wf.select(
-        F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("s"), "c"
-    ).localCheckpoint(eager=True)
-
-    merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        sy = F.split("s", " ")
-        pairs = vocab.select(
-            F.explode(
-                F.zip_with(
-                    F.slice(sy, 1, F.size(sy) - 1),
-                    F.slice(sy, 2, F.size(sy) - 1),
-                    lambda x, y: F.concat(x, F.lit(" "), y),
-                )
-            ).alias("pair"),
-            "c",
-        )
-        best = (
-            pairs.groupBy("pair")
-            .agg(F.sum("c").cast("long").alias("n"))
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:  # every word fully merged to one symbol
-            break
-        pair, n = best[0]["pair"], best[0]["n"]
-        a, b = pair.split(" ")
-        merges.append((step, pair, a + b, n))
-        sy2 = F.split("s", " ")
-        merged = F.aggregate(
-            F.slice(sy2, 2, F.size(sy2) - 1),
-            F.element_at(sy2, 1),
-            lambda acc, x: F.when(
-                ((acc == F.lit(a)) | acc.endswith(F.lit(" " + a)))
-                & (x == F.lit(b)),
-                F.concat(acc, F.lit(b)),
-            ).otherwise(F.concat(acc, F.lit(" "), x)),
-        )
-        vocab = vocab.select(merged.alias("s"), "c").localCheckpoint(
-            eager=True
-        )
-    return vocab, merges
 
 
 def _collect_word_freq(
     docs: DataFrame, text_col: str, min_count: int, max_words: int | None
 ) -> list[tuple[str, int]]:
-    """The one distributed step of the fast trainers: corpus → word
+    """The one distributed step of the trainers: corpus → word
     frequency table (one shuffle with map-side partials), bounded to
     the driver by ``min_count`` / ``max_words`` (deterministic
     (c desc, word asc) truncation so the bound never reorders merges
@@ -684,8 +631,9 @@ class _PairStats:
     """Incrementally maintained adjacent-pair statistics over a
     segmented word-frequency table: pair → total count (ALL adjacent
     positions, overlapping included, × word frequency — identical to
-    the distributed per-round aggregate) and pair → ids of words
-    containing it, plus per-symbol totals for WordPiece scoring."""
+    a recount of the whole vocabulary) and pair → ids of words
+    containing it, plus per-symbol totals for WordPiece scoring.
+    ``syms`` is the current segmentation of each word."""
 
     def __init__(self, words: list[tuple[str, int]]):
         self.freq = [c for _, c in words]
@@ -705,7 +653,7 @@ class _PairStats:
     def merge(self, a: str, b: str) -> set[tuple[str, str]]:
         """Apply the (a, b) merge to every word containing the pair,
         updating pair/symbol counts incrementally — the left-to-right
-        non-overlapping greedy scan, exactly the JVM fold's semantics.
+        non-overlapping greedy scan, exactly the oracle's list_reduce fold.
         Returns the set of pairs whose counts changed (the heap
         refresh set)."""
         pair = (a, b)
@@ -750,57 +698,23 @@ class _PairStats:
         return touched
 
 
-def bpe_train_batched(
-    docs: DataFrame,
-    n_merges: int = 8,
-    text_col="text",
-    min_count: int = 1,
-    max_words: int | None = None,
-) -> DataFrame:
-    """Production-vocabulary BPE training: the driver-local exact
-    trainer over the DISTRIBUTED word-frequency collapse → the same
-    (step, pair, merged, n) merge table as :func:`bpe_train`.
-
-    :func:`bpe_train` schedules one pair-aggregate + one merge-fold
-    Spark job per round — exact and fine at small merge budgets, but a
-    32k–100k production vocabulary means O(vocab) driver-scheduled
-    jobs. BPE training is a function of the word-FREQUENCY table only
-    (vocabulary-sized — ~10^6–10^8 rows at web scale vs the 10^12-row
-    corpus), so this path runs ONE distributed aggregation (the same
-    corpus→vocabulary collapse every round of the loop would reuse),
-    pulls the table to the driver, and trains with an incrementally
-    maintained pair index + lazy max-heap: identical argmax rule
-    (count desc, pair asc) and identical left-to-right greedy merge,
-    so at ``min_count=1`` / ``max_words=None`` the merge table is
-    bit-identical to :func:`bpe_train`'s (shared oracle + property-
-    tested differential). Total Spark jobs: 1, independent of
-    ``n_merges`` — the BENCH/bpe_batched.json row measures the win.
-
-    ``min_count`` / ``max_words`` bound driver memory at true web
-    scale (standard practice — HF trainers expose min_frequency); the
-    truncation is deterministic (c desc, word asc), and both default
-    to exact.
-    """
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    spark = docs.sparkSession
-    merges = _fast_bpe_merges(
-        _collect_word_freq(docs, text_col, min_count, max_words), n_merges
-    )
-    return spark.createDataFrame(
-        merges, "step int, pair string, merged string, n long"
-    )
-
-
 def _fast_bpe_merges(
     words: list[tuple[str, int]], n_merges: int
 ) -> list[tuple[int, str, str, int]]:
-    """Driver-local BPE merge loop: pair index + lazy max-heap, argmax
-    (count desc, pair asc) — symbols are ASCII [a-z0-9] so the Python
-    string heap order equals Spark's UTF8 binary ordering."""
+    """Driver-local BPE trainer over a word-frequency table → the merge
+    table rows (step, pair, merged, n); pure Python, no Spark."""
+    return _bpe_rounds(_PairStats(words), n_merges)
+
+
+def _bpe_rounds(
+    st: _PairStats, n_merges: int
+) -> list[tuple[int, str, str, int]]:
+    """BPE merge rounds over ``st`` (advanced in place): pair index +
+    lazy max-heap, argmax (count desc, pair asc) — symbols are ASCII
+    [a-z0-9] so the Python string heap order equals Spark's UTF8 binary
+    ordering."""
     import heapq
 
-    st = _PairStats(words)
     heap = [(-n, f"{a} {b}") for (a, b), n in st.pair_n.items()]
     heapq.heapify(heap)
     merges: list[tuple[int, str, str, int]] = []
@@ -812,7 +726,7 @@ def _fast_bpe_merges(
             if st.pair_n.get((a, b)) == -neg_n:  # stale entries skipped
                 best = (a, b, -neg_n)
                 break
-        if best is None:
+        if best is None:  # every word fully merged to one symbol
             break
         a, b, n = best
         merges.append((step, f"{a} {b}", a + b, n))
@@ -823,7 +737,7 @@ def _fast_bpe_merges(
     return merges
 
 
-def wordpiece_train_batched(
+def wordpiece_train(
     docs: DataFrame,
     n_merges: int = 8,
     text_col="text",
@@ -831,157 +745,68 @@ def wordpiece_train_batched(
     min_count: int = 1,
     max_words: int | None = None,
 ) -> DataFrame:
-    """Production-vocabulary WordPiece training: driver-local exact
-    trainer over the distributed word-frequency collapse → the same
-    (step, pair, merged, score_q, n) table as :func:`wordpiece_train`,
-    in ONE Spark job independent of ``n_merges`` (see
-    :func:`bpe_train_batched` for the why and the bounding knobs).
-
-    The likelihood score count(ab)·precision ÷ (count(a)·count(b))
-    depends on SYMBOL totals, which drift on every merge — so instead
-    of a heap (whose entries would stale on symbol-count changes, not
-    just pair-count changes) each round scans the pair table once:
-    vocabulary-sized pure-Python work per round, still zero scheduled
-    jobs. Python int floor-division replays the DECIMAL(38,0) DIV
-    exactly (both are exact integer arithmetic on positives).
-    """
-    if n_merges < 1:
-        raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    if precision < 1:
-        raise ValueError(f"precision must be >= 1, got {precision}")
-    spark = docs.sparkSession
-    st = _PairStats(_collect_word_freq(docs, text_col, min_count, max_words))
-    merges: list[tuple[int, str, str, int, int]] = []
-    for step in range(1, n_merges + 1):
-        if not st.pair_n:
-            break
-        best = min(
-            (
-                (
-                    -((n * precision) // (st.sym_n[a] * st.sym_n[b])),
-                    f"{a} {b}",
-                    n,
-                )
-                for (a, b), n in st.pair_n.items()
-            ),
-        )
-        neg_score, pair_s, n = best
-        a, b = pair_s.split(" ")
-        merges.append((step, pair_s, a + b, -neg_score, n))
-        st.merge(a, b)
-    return spark.createDataFrame(
-        merges, "step int, pair string, merged string, score_q long, n long"
-    )
-
-
-def wordpiece_train(
-    docs: DataFrame,
-    n_merges: int = 8,
-    text_col="text",
-    precision: int = 10**12,
-) -> DataFrame:
-    """Iterative WordPiece tokenizer training (Schuster & Nakajima,
-    ICASSP'12; the likelihood-scored merge rule BERT's tokenizer was
-    trained with) → the ordered merge table
-    (step, pair, merged, score_q, n).
+    """WordPiece tokenizer training (Schuster & Nakajima, ICASSP'12; the
+    likelihood-scored merge rule BERT's tokenizer was trained with) →
+    the ordered merge table (step, pair, merged, score_q, n).
 
     Differs from :func:`bpe_train` only in the per-round argmax: BPE
     merges the most FREQUENT adjacent pair; WordPiece merges the pair
     maximizing the corpus-likelihood gain count(ab) /
     (count(a)·count(b)) — rare-but-strongly-associated pairs win over
-    merely common ones. The score is quantized to ``score_q =
-    ⌊count(ab)·precision / (count(a)·count(b))⌋`` in exact DECIMAL(38)
-    arithmetic (ties below 1/precision break on pair ascending), which
-    keeps every round's argmax bit-identical in any engine — the float
-    division HuggingFace's trainer uses cannot be externally
-    replayed. (HF also renders continuation pieces with a ``##``
-    prefix; that is tokenizer-output presentation, orthogonal to the
-    merge order learned here.)
+    merely common ones. Pair counts and the greedy merge follow
+    subword-nmt exactly as in :func:`bpe_train`. The score is quantized
+    to ``score_q = ⌊count(ab)·precision / (count(a)·count(b))⌋`` in
+    exact DECIMAL(38) arithmetic (ties below 1/precision break on pair
+    ascending), which keeps every round's argmax bit-identical in any
+    engine — the float division HuggingFace's trainer uses cannot be
+    externally replayed. (HF also renders continuation pieces with a
+    ``##`` prefix; that is tokenizer-output presentation, orthogonal to
+    the merge order learned here.)
 
-    Scale shape = bpe_train's: one corpus→word-frequency collapse,
-    then vocabulary-sized rounds — a pair aggregate, a symbol-count
-    aggregate (both map-side partial), two symbol-count joins (symbol
-    tables are tiny; AQE broadcasts), a 1-row TakeOrderedAndProject
-    argmax, and the shuffle-free JVM merge fold.
+    Scale shape = :func:`bpe_train`'s: one distributed word-frequency
+    collapse, then driver-local rounds (:func:`_fast_wordpiece_merges`),
+    so the Spark job count is independent of ``n_merges``;
+    ``min_count`` / ``max_words`` bound the driver's vocabulary the
+    same way.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
     if precision < 1:
         raise ValueError(f"precision must be >= 1, got {precision}")
-    spark = docs.sparkSession
-    wf = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
-        .filter(F.col("word").rlike("^[a-z0-9]+$") & (F.length("word") >= 2))
-        .groupBy("word")
-        .agg(F.count("*").alias("c"))
+    merges = _fast_wordpiece_merges(
+        _collect_word_freq(docs, text_col, min_count, max_words),
+        n_merges,
+        precision,
     )
-    vocab = wf.select(
-        F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("s"), "c"
-    ).localCheckpoint(eager=True)
-
-    merges: list[tuple[int, str, str, int, int]] = []
-    for step in range(1, n_merges + 1):
-        sy = F.split("s", " ")
-        pair_counts = (
-            vocab.select(
-                F.explode(
-                    F.zip_with(
-                        F.slice(sy, 1, F.size(sy) - 1),
-                        F.slice(sy, 2, F.size(sy) - 1),
-                        lambda x, y: F.concat(x, F.lit(" "), y),
-                    )
-                ).alias("pair"),
-                "c",
-            )
-            .groupBy("pair")
-            .agg(F.sum("c").cast("long").alias("n"))
-        )
-        sym_counts = (
-            vocab.select(F.explode(sy).alias("sym"), "c")
-            .groupBy("sym")
-            .agg(F.sum("c").cast("long").alias("m"))
-        )
-        scored = (
-            pair_counts.withColumn("a", F.split("pair", " ")[0])
-            .withColumn("b", F.split("pair", " ")[1])
-            .join(sym_counts.withColumnRenamed("sym", "a")
-                  .withColumnRenamed("m", "ma"), "a")
-            .join(sym_counts.withColumnRenamed("sym", "b")
-                  .withColumnRenamed("m", "mb"), "b")
-            .withColumn(
-                "score_q",
-                F.expr(
-                    f"CAST(n AS DECIMAL(38,0)) * {precision}"
-                    " DIV (CAST(ma AS DECIMAL(38,0)) * mb)"
-                ),
-            )
-        )
-        best = (
-            scored.orderBy(F.desc("score_q"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not best:  # every word fully merged to one symbol
-            break
-        pair, n, score_q = best[0]["pair"], best[0]["n"], best[0]["score_q"]
-        a, b = pair.split(" ")
-        merges.append((step, pair, a + b, int(score_q), int(n)))
-        sy2 = F.split("s", " ")
-        merged = F.aggregate(
-            F.slice(sy2, 2, F.size(sy2) - 1),
-            F.element_at(sy2, 1),
-            lambda acc, x: F.when(
-                ((acc == F.lit(a)) | acc.endswith(F.lit(" " + a)))
-                & (x == F.lit(b)),
-                F.concat(acc, F.lit(b)),
-            ).otherwise(F.concat(acc, F.lit(" "), x)),
-        )
-        vocab = vocab.select(merged.alias("s"), "c").localCheckpoint(
-            eager=True
-        )
-    return spark.createDataFrame(
+    return docs.sparkSession.createDataFrame(
         merges, "step int, pair string, merged string, score_q long, n long"
     )
+
+
+def _fast_wordpiece_merges(
+    words: list[tuple[str, int]], n_merges: int, precision: int
+) -> list[tuple[int, str, str, int, int]]:
+    """Driver-local WordPiece trainer over a word-frequency table → the
+    merge table rows (step, pair, merged, score_q, n); pure Python, no
+    Spark. The score depends on SYMBOL totals, which drift on every
+    merge — so instead of a heap (whose entries would stale on
+    symbol-count changes, not just pair-count changes) each round scans
+    the pair table once. Python int floor-division replays the
+    DECIMAL(38,0) DIV exactly (both are exact integer arithmetic on
+    positives)."""
+    st = _PairStats(words)
+    merges: list[tuple[int, str, str, int, int]] = []
+    for step in range(1, n_merges + 1):
+        if not st.pair_n:  # every word fully merged to one symbol
+            break
+        neg_score, pair_s, n = min(
+            (-((n * precision) // (st.sym_n[a] * st.sym_n[b])), f"{a} {b}", n)
+            for (a, b), n in st.pair_n.items()
+        )
+        a, b = pair_s.split(" ")
+        merges.append((step, pair_s, a + b, -neg_score, n))
+        st.merge(a, b)
+    return merges
 
 
 def tfidf_search(

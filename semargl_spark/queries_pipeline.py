@@ -3749,27 +3749,15 @@ FROM p GROUP BY pair ORDER BY n DESC, pair LIMIT 20
 
 
 def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative BPE tokenizer training, 8 merge rounds → the ordered
-    merge table (text.bpe_train): vocabulary-collapse-first, per-round
-    1-row argmax + JVM fold merge — subword-nmt semantics."""
+    """BPE tokenizer training, 8 merge rounds → the ordered merge table
+    (text.bpe_train): one distributed word-frequency collapse, then the
+    driver-local pair-index trainer — subword-nmt semantics, and a
+    Spark job count independent of the merge budget."""
     return text.bpe_train(_docs(spark, sf_dir), n_merges=8)
 
 
-def q_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-vocabulary BPE path (text.bpe_train_batched): ONE
-    distributed word-frequency collapse, then the driver-local exact
-    pair-index trainer — bit-identical merge table to bpe_train
-    (shared oracle proves it), but 1 Spark job total instead of
-    O(n_merges); the path a 32k-100k-merge production vocab takes."""
-    return text.bpe_train_batched(_docs(spark, sf_dir), n_merges=8)
-
-
-def q_wordpiece_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-vocabulary WordPiece path
-    (text.wordpiece_train_batched): same one-collapse shape with the
-    likelihood-score argmax re-scanned per round driver-locally;
-    bit-identical to wordpiece_train (shared oracle)."""
-    return text.wordpiece_train_batched(_docs(spark, sf_dir), n_merges=8)
+# a gate name the 285-gate contract keeps: same trainer, same oracle
+q_bpe_train_batched = q_bpe_train
 
 
 def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3782,7 +3770,7 @@ def q_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_ctes(n_merges: int = 8) -> str:
     """Unrolled merge rounds: per round, a pair-count CTE over the
     current vocabulary, a 1-row argmax, and a list_reduce greedy
-    left-to-right merge — the same string fold the Spark side runs."""
+    left-to-right merge — the same greedy merge the trainer applies."""
     sql = r"""
 WITH wf AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c
             FROM (SELECT unnest(string_split(regexp_replace(
@@ -3830,8 +3818,6 @@ FROM v{n_merges}"""
 
 
 ORACLES["bpe_train"] = _bpe_train_oracle()
-# the batched trainer's claim IS bit-identity with the per-round loop,
-# so it shares the loop's unrolled-round oracle verbatim
 ORACLES["bpe_train_batched"] = _bpe_train_oracle()
 ORACLES["bpe_segment"] = _bpe_segment_oracle()
 
@@ -7432,11 +7418,14 @@ FROM w2
 
 
 def q_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative WordPiece tokenizer training, 8 merge rounds → the
-    ordered merge table with quantized likelihood scores
-    (text.wordpiece_train): BPE's loop with the argmax switched to
-    count(ab)/(count(a)·count(b)), exact DECIMAL arithmetic."""
+    """WordPiece tokenizer training, 8 merge rounds → the ordered merge
+    table with quantized likelihood scores (text.wordpiece_train):
+    BPE's trainer with the argmax switched to
+    count(ab)/(count(a)·count(b)), exact integer arithmetic."""
     return text.wordpiece_train(_docs(spark, sf_dir), n_merges=8)
+
+
+q_wordpiece_train_batched = q_wordpiece_train
 
 
 def _wordpiece_train_oracle(n_merges: int = 8, precision: int = 10**12) -> str:

@@ -26,11 +26,12 @@ from urllib.request import url2pathname
 
 # extension → parser format, mirroring the reference's processor-factory
 # dispatch (BaseStreamProcessor.processWithMime; formats as in
-# operators/extract.py kernels)
+# operators/extract.py kernels); sources/rdf_files.py reads it too
 _EXT_FORMAT = {
     ".nt": "ntriples",
     ".nq": "nquads",
     ".ttl": "turtle",
+    ".trig": "trig",
     ".jsonld": "jsonld",
     ".json": "jsonld",
     ".rdf": "rdfxml",
@@ -45,6 +46,7 @@ _MIME_FORMAT = {
     "application/n-triples": "ntriples",
     "application/n-quads": "nquads",
     "text/turtle": "turtle",
+    "application/trig": "trig",
     "application/ld+json": "jsonld",
     "application/json": "jsonld",
     "application/rdf+xml": "rdfxml",

@@ -27,18 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_EXT_FMT = {
-    "nt": "ntriples",
-    "nq": "nquads",
-    "ttl": "turtle",
-    "jsonld": "jsonld",
-    "json": "jsonld",
-    "rdf": "rdfxml",
-    "xml": "rdfxml",
-    "html": "rdfa",
-    "xhtml": "rdfa",
-    "svg": "rdfa",
-}
+from .fetch import _EXT_FORMAT
 
 
 def read_rdf_files(
@@ -62,13 +51,13 @@ def read_rdf_files(
     conv_m = F.regexp_extract(fname, name_pattern, 1)
     turn_m = F.regexp_extract(fname, name_pattern, 2)
     matched = (conv_m != "") & (turn_m != "")
-    ext = F.lower(F.regexp_extract(fname, r"\.([A-Za-z0-9]+)$", 1))
+    ext = F.lower(F.regexp_extract(fname, r"(\.[A-Za-z0-9]+)$", 1))
     fmt_col = (
         F.lit(fmt)
         if fmt is not None
         else F.element_at(
             F.create_map(
-                *[F.lit(x) for kv in _EXT_FMT.items() for x in kv]
+                *[F.lit(x) for kv in _EXT_FORMAT.items() for x in kv]
             ),
             ext,
         )

@@ -200,30 +200,39 @@ def ensure_py_files(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+# Scale-oriented session defaults that do not depend on the host:
+# AQE on (runtime re-plan + skew-join), Arrow enabled, Kryo. Applied by
+# tuned_session and by the spark-submit jobs, which leave master,
+# parallelism and memory to spark-submit.
+SESSION_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Python-UDF-bound scans need finer input splits than the 128MB
+    # default: extraction costs ~50us/row, so a 128MB split is
+    # minutes of single-task work (SURVEY.md §4.2 spill-aware sizing)
+    "spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024),
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "20000",
+    "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+}
+
+
 def tuned_session(
     parallelism: int = 8,
     app_name: str = "semargl-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Session with the scale-oriented defaults used by bench and jobs:
-    AQE on (runtime re-plan + skew-join), Arrow enabled, shuffle
-    partitions sized to the parallelism level. ``extra_conf`` entries
-    are applied LAST, so callers (e.g. the stress harness enabling the
-    UI for its REST metrics) can override any default."""
+    """Local session with :data:`SESSION_DEFAULTS` plus shuffle
+    partitions sized to the parallelism level and a local-mode driver
+    heap. ``extra_conf`` entries are applied LAST, so callers (e.g. the
+    stress harness enabling the UI for its REST metrics) can override
+    any default."""
     sp = shuffle_partitions if shuffle_partitions is not None else max(parallelism * 2, 8)
     builder = (
         SparkSession.builder.master(f"local[{parallelism}]")
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Python-UDF-bound scans need finer input splits than the 128MB
-        # default: extraction costs ~50us/row, so a 128MB split is
-        # minutes of single-task work (SURVEY.md §4.2 spill-aware sizing)
-        .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+        .config(map=SESSION_DEFAULTS)
         # local mode = ONE JVM doing all executors' work: the 1g
         # spark.driver.memory default leaves 16-32 Arrow-heavy tasks
         # GC-bound (observed: GCLocker allocation stalls at local[32]).

@@ -19,10 +19,12 @@ def test_format_priority():
     assert format_for("a.nt") == "ntriples"
     assert format_for("file:///tmp/b.rdf") == "rdfxml"
     assert format_for("http://h/c.svg") == "rdfa"
+    assert format_for("a.trig") == "trig"
     # content sniff as last resort
     assert format_for("noext", text=NT) == "ntriples"
     # mime parameters are stripped
     assert format_for("x", mime="text/turtle; charset=utf-8") == "turtle"
+    assert format_for("x", mime="application/trig") == "trig"
 
 
 def test_fetch_document_file_uri(tmp_path):

@@ -8,21 +8,8 @@ Iceberg swap must preserve (r3 verdict item 4)."""
 
 import duckdb
 import pytest
-from pyspark.sql import SparkSession
 
 from semargl_spark.operators.materialize import merge_upsert
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 BATCHES = [

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from semargl_spark.operators.extract import extract_statements, triples
+from semargl_spark.operators.extract import errors, extract_statements, triples
 from semargl_spark.sources.rdf_files import read_rdf_files
 
 NT = '<urn:e:1> <urn:p:name> "Alice" .\n'
@@ -28,6 +28,31 @@ def test_extension_format_detection(spark, tmp_path):
     df = read_rdf_files(spark, str(tmp_path) + "/*")
     rows = {(r.conv_id, r.turn_idx): r.fmt for r in df.collect()}
     assert rows == {("c7", 0): "ntriples", ("c7", 1): "jsonld"}
+
+
+def test_trig_and_htm_files_reach_their_kernels(spark, tmp_path):
+    """.trig goes to the TriG kernel (not Turtle, which rejects the
+    graph block) and .htm to RDFa, as in sources/fetch.py."""
+    (tmp_path / "c2_t0.trig").write_text(
+        "@prefix ex: <http://ex.org/> .\nex:g { ex:a ex:p ex:b . }\n",
+        encoding="utf-8",
+    )
+    (tmp_path / "c2_t1.htm").write_text(
+        '<html><body><div about="http://ex.org/c">'
+        '<span property="http://ex.org/q">v</span></div></body></html>',
+        encoding="utf-8",
+    )
+    st = extract_statements(read_rdf_files(spark, str(tmp_path) + "/*"))
+    assert errors(st).count() == 0
+    got = {
+        (r.turn_idx, r.subj, r.pred, r.obj, r.graph)
+        for r in triples(st).collect()
+    }
+    assert got == {
+        (0, "http://ex.org/a", "http://ex.org/p", "http://ex.org/b",
+         "http://ex.org/g"),
+        (1, "http://ex.org/c", "http://ex.org/q", "v", None),
+    }
 
 
 def test_unmatched_name_falls_back_to_basename(spark, tmp_path):

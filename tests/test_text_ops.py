@@ -781,26 +781,6 @@ def test_html_main_blocks_separates_boilerplate(spark):
     assert nav.link_pm == 900
 
 
-def test_bpe_train_batched_matches_loop(spark):
-    """The driver-local fast trainer must be BIT-identical to the
-    per-round distributed loop on the same corpus."""
-    from semargl_spark.operators.text import bpe_train, bpe_train_batched
-
-    texts = [
-        "aaaaa aaaa aaa ababab",
-        "banana bandana aaaaa",
-        "low lower lowest low low",
-        "abab aa bb ab ba",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    loop = [tuple(r) for r in bpe_train(df, n_merges=6).orderBy("step").collect()]
-    fast = [tuple(r) for r in
-            bpe_train_batched(df, n_merges=6).orderBy("step").collect()]
-    assert fast == loop
-
-
 def test_fast_bpe_merges_fuzz_matches_mirror():
     """Property: the incremental pair-index + lazy-heap trainer equals
     the recount-from-scratch mirror on random small-alphabet corpora
@@ -828,11 +808,48 @@ def test_fast_bpe_merges_fuzz_matches_mirror():
     check()
 
 
+def _wordpiece_train_mirror(word_counts, n_merges, precision=10**12):
+    """Recount-from-scratch WordPiece reference: every round recounts
+    pair and symbol totals over the whole vocabulary, scores
+    count(ab)·precision // (count(a)·count(b)), takes the argmax
+    (score desc, "a b" asc) and applies the same greedy left-to-right
+    non-overlapping merge as BPE."""
+    vocab = {tuple(w): c for w, c in word_counts.items()}
+    merges = []
+    for step in range(1, n_merges + 1):
+        pairs, syms = {}, {}
+        for s, c in vocab.items():
+            for i in range(len(s) - 1):
+                pairs[(s[i], s[i + 1])] = pairs.get((s[i], s[i + 1]), 0) + c
+            for x in s:
+                syms[x] = syms.get(x, 0) + c
+        if not pairs:
+            break
+        scored = [
+            ((n * precision) // (syms[a] * syms[b]), f"{a} {b}", n)
+            for (a, b), n in pairs.items()
+        ]
+        q, pair, n = min(scored, key=lambda t: (-t[0], t[1]))
+        a, b = pair.split(" ")
+        merges.append((step, pair, a + b, q, n))
+        new_vocab = {}
+        for s, c in vocab.items():
+            out, i = [], 0
+            while i < len(s):
+                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(s[i])
+                    i += 1
+            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + c
+        vocab = new_vocab
+    return merges
+
+
 def test_wordpiece_train_batched_matches_loop(spark):
-    from semargl_spark.operators.text import (
-        wordpiece_train,
-        wordpiece_train_batched,
-    )
+    """wordpiece_train equals the recount-from-scratch mirror loop."""
+    from semargl_spark.operators.text import wordpiece_train
 
     texts = [
         "aaaaa aaaa aaa ababab qz qz qzqz",
@@ -842,32 +859,56 @@ def test_wordpiece_train_batched_matches_loop(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
     )
-    loop = [tuple(r) for r in
-            wordpiece_train(df, n_merges=5).orderBy("step").collect()]
-    fast = [tuple(r) for r in
-            wordpiece_train_batched(df, n_merges=5).orderBy("step").collect()]
-    assert fast == loop
+    wc = {}
+    for t in texts:
+        for w in t.split():
+            wc[w] = wc.get(w, 0) + 1
+    got = [tuple(r) for r in
+           wordpiece_train(df, n_merges=5).orderBy("step").collect()]
+    assert got == _wordpiece_train_mirror(wc, 5)
+
+
+def test_fast_wordpiece_merges_fuzz_matches_mirror():
+    """Property: the incremental WordPiece trainer equals the
+    recount-from-scratch mirror on random small-alphabet corpora; small
+    precisions force quantized-score ties onto the pair tie-break."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from semargl_spark.operators.text import _fast_wordpiece_merges
+
+    word = st.text(alphabet="ab0", min_size=2, max_size=12)
+    corpus = st.lists(st.tuples(word, st.integers(1, 9)),
+                      min_size=1, max_size=15)
+
+    @given(corpus, st.sampled_from([1, 7, 10**12]))
+    @settings(max_examples=300, deadline=None)
+    def check(pairs, precision):
+        wc = {}
+        for w, c in pairs:
+            wc[w] = wc.get(w, 0) + c
+        expected = _wordpiece_train_mirror(wc, 8, precision)
+        got = _fast_wordpiece_merges(sorted(wc.items()), 8, precision)
+        assert got == expected
+
+    check()
 
 
 def test_bpe_train_batched_bounding_knobs(spark):
     """min_count / max_words bound driver state deterministically: the
     truncated table trains as if the dropped words never existed."""
-    from semargl_spark.operators.text import bpe_train, bpe_train_batched
+    from semargl_spark.operators.text import bpe_train
 
     df = spark.createDataFrame(
         [(0, "aaaa aaaa aaaa bbbb"), (1, "aaaa cccc")],
         "doc_id int, text string",
     )
     # min_count=2 keeps only 'aaaa' (freq 4)
-    out = bpe_train_batched(df, n_merges=2, min_count=2).collect()
+    out = bpe_train(df, n_merges=2, min_count=2).collect()
     assert [r["merged"] for r in out] == ["aa", "aaaa"]
     # max_words=1 keeps the (c desc, word asc) top word only — 'aaaa'
-    out2 = bpe_train_batched(df, n_merges=2, max_words=1).collect()
+    out2 = bpe_train(df, n_merges=2, max_words=1).collect()
     assert [r["merged"] for r in out2] == ["aa", "aaaa"]
-    # and unbounded equals the loop trainer
-    loop = [tuple(r) for r in bpe_train(df, n_merges=3).collect()]
-    fast = [tuple(r) for r in bpe_train_batched(df, n_merges=3).collect()]
-    assert fast == loop
 
 
 def test_sentence_split_guards_and_terminators(spark):

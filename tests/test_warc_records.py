@@ -1,21 +1,7 @@
 """WARC/1.x framing: Content-Length-authoritative payload cuts, HTTP
 header lifting, delimiter recovery, never-raise tolerance."""
 
-import pytest
-from pyspark.sql import SparkSession
-
 from semargl_spark.sources.warc_records import split_warc_records
-
-
-@pytest.fixture(scope="module")
-def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    yield s
 
 
 def _warc(uri: str, payload: bytes, wtype: str = "response",

@@ -81,7 +81,7 @@ def main() -> None:
         "data shuffle (repartition) to spread its single output "
         "partition first; the indexed side is already fanned out.",
     )
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())))
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
