@@ -13,7 +13,7 @@ Architecture (SURVEY.md §7):
     transcripts(conv_id, turn_idx, role, text, tool, ts)
       → [extract]  mapInArrow vectorized parser kernels → triples
       → [link]     broadcast-dictionary entity linking
-      → [canon]    connected-components union-find (iterative DF joins)
+      → [canon]    connected components (contraction rounds, driver union-find finish)
       → [merge]    nodes/edges tables + lineage/metrics side outputs
 
 Parser kernels are pure Python (no Spark imports) so they are unit

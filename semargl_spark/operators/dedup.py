@@ -532,8 +532,8 @@ def _pad_id(c):
 def _component_map(dup_pairs: DataFrame) -> DataFrame:
     """Verified duplicate pairs → (node, component) over the padded-id
     duplicate graph (canon.connected_components). Dup clusters are tiny
-    by construction, so the pointer-jumping CC converges in a couple of
-    rounds."""
+    by construction, so a duplicate graph of up to 10^6 pairs closes on
+    the driver with no contraction round."""
     from .canon import connected_components
 
     edges = dup_pairs.select(

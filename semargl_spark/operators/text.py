@@ -1036,16 +1036,30 @@ def unigram_vocab(
     word-char), one map-side-partial groupBy, and the top-N is a
     TakeOrderedAndProject — never a global sort.
     """
-    if max_piece_len < 1:
-        raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
-    if n_pieces < 0:
-        raise ValueError(f"n_pieces must be >= 0, got {n_pieces}")
-    wf = (
+    return _piece_inventory(_unigram_words(docs, text_col), n_pieces,
+                            max_piece_len)
+
+
+def _unigram_words(docs: DataFrame, text_col: str) -> DataFrame:
+    """The corpus collapsed to (word, c) over lowercase alphanumeric
+    words — the one corpus-sized shuffle of the unigram tokenizer."""
+    return (
         docs.select(F.explode(_tokens(text_col)).alias("word"))
         .filter(F.col("word").rlike("^[a-z0-9]+$"))
         .groupBy("word")
         .agg(F.count("*").alias("c"))
     )
+
+
+def _piece_inventory(
+    wf: DataFrame, n_pieces: int, max_piece_len: int
+) -> DataFrame:
+    """(word, c) → :func:`unigram_vocab`'s (piece, cnt) inventory."""
+    if max_piece_len < 1:
+        raise ValueError(f"max_piece_len must be >= 1, got {max_piece_len}")
+    if n_pieces < 0:
+        raise ValueError(f"n_pieces must be >= 0, got {n_pieces}")
+
     def _substrs(plen: int):
         # single-parameter lambda: a 2-arg lambda would be bound by
         # F.transform as (element, index) and silently shadow plen
@@ -1113,14 +1127,10 @@ def unigram_segment(
     join of this table. ``max_word_len`` optionally bounds the lattice
     (gate queries use it so the SQL oracle's unrolled DP stays small).
     """
-    vocab = unigram_vocab(docs, n_pieces, max_piece_len, text_col)
+    # one corpus collapse feeds both the inventory and the lattice
+    wf = _unigram_words(docs, text_col).localCheckpoint(eager=False)
+    vocab = _piece_inventory(wf, n_pieces, max_piece_len)
     pieces = {r["piece"]: r["cnt"] for r in vocab.collect()}
-    wf = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
-        .filter(F.col("word").rlike("^[a-z0-9]+$"))
-        .groupBy("word")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
     if max_word_len is not None:
         wf = wf.filter(F.length("word") <= max_word_len)
     K = max_piece_len

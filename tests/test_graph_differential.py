@@ -126,6 +126,25 @@ def test_cc_incremental_matches_union_find(spark):
         assert got == exp2
 
 
+def test_cc_incremental_driver_finish_matches_rounds(spark, monkeypatch):
+    from semargl_spark.operators import canon
+
+    def run():
+        out = []
+        for edges in _graphs():
+            half = len(edges) // 2
+            comp0 = canon.connected_components(
+                _df(spark, edges[:half]).select("src", "dst"))
+            delta = _df(spark, edges[half:]).select("src", "dst")
+            out.append(sorted(map(tuple, canon.cc_incremental(comp0, delta)
+                                  .collect())))
+        return out
+
+    default = run()
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
+    assert run() == default
+
+
 def test_bounded_paths_alt_matches_bfs(spark):
     from semargl_spark.operators.graph import bounded_paths_alt
 

@@ -84,17 +84,28 @@ def _rows(pdf):
 
 
 @pytest.mark.parametrize("gate", ["canonicalize", "kg_pagerank"])
-def test_reliable_checkpoints_keep_oracle_output(spark, checkpoint_dir, gate):
+def test_reliable_checkpoints_keep_oracle_output(spark, checkpoint_dir, gate,
+                                                 monkeypatch):
     """With a checkpoint dir set, CC and PageRank write their rounds'
     reliable checkpoints there and still match their DuckDB oracles."""
     import duckdb
 
     import __spark_entry__ as entry
+    from semargl_spark.operators import canon
 
-    got = entry.queries()[gate](spark, SF_DIR).toPandas()
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
     want = con.sql(entry.oracle_sql()[gate]).df()
-    assert sorted(got.columns) == sorted(want.columns)
-    assert _rows(got) == _rows(want)
+
+    def check_oracle():
+        got = entry.queries()[gate](spark, SF_DIR).toPandas()
+        assert sorted(got.columns) == sorted(want.columns)
+        assert _rows(got) == _rows(want)
+
+    check_oracle()
+    if gate == "canonicalize":
+        # the gate's graph closes on the driver with no round to
+        # checkpoint: force the contraction rounds and check again
+        monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
+        check_oracle()
     assert any(p.is_dir() for p in checkpoint_dir.glob("*/rdd-*"))

@@ -34,10 +34,12 @@ def test_connected_components_pair(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_unconverged_raises(spark):
+def test_connected_components_unconverged_raises(spark, monkeypatch):
     import random
 
     import pytest
+
+    from semargl_spark.operators import canon
 
     # a 300-node path whose ids are shuffled, so min-label propagation
     # cannot ride the lexicographic order: one contraction round is far
@@ -45,6 +47,11 @@ def test_connected_components_unconverged_raises(spark):
     ids = [f"n{i:03d}" for i in range(300)]
     random.Random(7).shuffle(ids)
     edges = spark.createDataFrame(list(zip(ids, ids[1:])), ["src", "dst"])
+    # at the default size bound the 299 edges close on the driver
+    got = connected_components(edges, max_iter=1).select("component")
+    assert [r["component"] for r in got.distinct().collect()] == ["n000"]
+    # with no driver finish the rounds alone must converge or refuse
+    monkeypatch.setattr(canon, "_DRIVER_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=1).collect()
     got = connected_components(edges).select("component").distinct().collect()
