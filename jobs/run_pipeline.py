@@ -7,14 +7,16 @@ Stages: extract → link → canon → [infer] → [owl] → [resolve] → [fuse
 crosses one stage step in ``run``: it overwrites the stage's side
 outputs under <output>/ and appends the stage's lineage rows, which
 double as the run's stage ledger. ``--resume`` skips the writes of every
-stage the ledger records for the run-id, still re-derives the frames
-later stages need, and reads side-output counts back from the written
-tables, so a fresh and a resumed run report the same summary. Bracketed
-stages are opt-in flags: --ontology (RDFS), --owl-axioms (OWL-RL
-property semantics), --resolve-functional (truth-discovery conflict
-resolution), --fuse-sameas (sameAs entity fusion), --shapes
-(SHACL-lite), --content-address (RDFC-1.0 per-document hashes),
---sft-render (chat-template SFT exit), --sparql.
+stage the ledger records for the run-id and still re-derives the frames
+later stages need. After merge the job reads this run's stage-summary
+rows once: every count the ledger holds (errors, side-output and merge
+edge counts) comes from them, so a fresh and a resumed run report the
+same summary by construction. Bracketed stages are opt-in flags:
+--ontology (RDFS), --owl-axioms (OWL-RL property semantics),
+--resolve-functional (truth-discovery conflict resolution),
+--fuse-sameas (sameAs entity fusion), --shapes (SHACL-lite),
+--content-address (RDFC-1.0 per-document hashes), --sft-render
+(chat-template SFT exit), --sparql.
 
 Build the zip with:  python -c "from semargl_spark.spark_util import \
 build_pyfiles_zip; print(build_pyfiles_zip('semargl_spark.zip'))"
@@ -140,7 +142,7 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
     from pyspark.sql import functions as F
 
     from semargl_spark.operators.canon import connected_components
-    from semargl_spark.operators.extract import errors, extract_statements, triples
+    from semargl_spark.operators.extract import extract_statements, triples
     from semargl_spark.operators.link import fuzzy_link_entities, link_entities
     from semargl_spark.operators.materialize import (
         lineage_rows,
@@ -174,7 +176,7 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             if not is_missing_path(exc):
                 raise
 
-    resumed: list[str] = []
+    executed: list[str] = []
     summary: dict = {"run_id": run_id}
 
     def stage(name: str, df, **tables) -> None:
@@ -183,38 +185,23 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         overwritten at ``<output>/<table>``, then the stage's ledger
         rows, an audit of ``df``, are written. Either way the caller
         goes on to derive the frames later stages need."""
+        executed.append(name)
         if name in done_stages:
-            resumed.append(name)
             return
         for table, frame in tables.items():
             frame.write.mode("overwrite").parquet(f"{output}/{table}")
         write_lineage(lineage_rows(df, run_id, name), f"{output}/lineage")
 
     def written(table: str):
-        """A table of this run read back from disk: side-output counts
-        agree between a fresh run and a resumed one that skipped the
-        write, and a resumed stage never recomputes a table to count it."""
+        """A table under <output> read back from disk, so a fresh and a
+        resumed run count the same rows."""
         return spark.read.parquet(f"{output}/{table}")
 
-    # named observation on the extraction output: per-run metric rows
-    # (statements / error statements) collected by the JVM during the
-    # job's own actions — zero extra passes, the production-monitoring
-    # hook a 10^12-turn run exposes to its scheduler
-    from pyspark.sql import Observation
-
-    # unnamed → a session-unique internal name; a fixed name would
-    # collide when run() executes twice in one session (resume/replay)
-    obs = Observation()
     statements = extract_statements(
         transcripts, context_registry=context_registry
-    ).observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.sum((F.col("obj_kind") == "error").cast("long")).alias("error_rows"),
     ).persist()
     stage("extract", statements)
     st = triples(statements)
-    err = errors(statements)
 
     components = None
     if dictionary:
@@ -281,7 +268,6 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
         ).localCheckpoint(eager=False)
         st = st.unionByName(owl_inf, allowMissingColumns=True)
         stage("owl", owl_inf)
-        summary["owl_inferred"] = owl_inf.count()
 
     if resolve_functional:
         # conflict resolution: for each listed predicate keep ONE object
@@ -306,7 +292,6 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             )
         )
         stage("resolve", winners)
-        summary["resolved_claims"] = winners.count()
 
     if fuse_sameas:
         # entity fusion: close the sameAs pairs now present (asserted +
@@ -340,7 +325,6 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             .drop("_csub", "_cobj")
         )
         stage("fuse", mapping)
-        summary["fused_nodes"] = mapping.count()
 
     if shapes:
         # data-quality side output: violation rows only, never the
@@ -354,7 +338,6 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             shape_list,
         )
         stage("validate", violations, violations=violations)
-        summary["violations"] = written("violations").count()
 
     if content_address:
         # content addressing runs over the ORIGINAL per-document
@@ -395,26 +378,39 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             id_col="conv_num", text_col="rendered",
         )
         stage("sft", rendered, sft=rendered, sft_manifest=manifest)
-        summary["sft_conversations"] = written("sft").count()
         summary["sft_bins"] = written("sft_manifest").count()
 
-    if "merge" in done_stages:
-        # whole run already completed: report from the materialized tables
-        resumed.append("merge")
-        summary["nodes"] = written("nodes").count()
-        summary["edges"] = written("edges").count()
-    else:
-        summary.update(materialize_kg(st, components, output, run_id))
-    summary["errors"] = err.count()
+    executed.append("merge")
+    if "merge" not in done_stages:
+        materialize_kg(st, components, output, run_id)
+    # the stage ledger is the run's counter: one read of this run's
+    # stage-summary rows fills every count it holds, fresh or resumed
+    ledger = {
+        r["stage"]: r
+        for r in written("lineage")
+        .filter(
+            (F.col("run_id") == run_id)
+            & (F.col("partition_id") == -1)
+            & F.col("stage").isin(executed)
+        )
+        .collect()
+    }
+    extract = ledger["extract"]
+    summary["errors"] = extract["error_rows"]
+    summary["observed"] = {"rows": extract["output_rows"],
+                           "error_rows": extract["error_rows"]}
+    for name, key in (
+        ("owl", "owl_inferred"), ("resolve", "resolved_claims"),
+        ("fuse", "fused_nodes"), ("validate", "violations"),
+        ("sft", "sft_conversations"), ("merge", "edges"),
+    ):
+        if name in ledger:
+            summary[key] = ledger[name]["output_rows"]
+    # declared, not inferred: an empty graph writes no node files
+    summary["nodes"] = (
+        spark.read.schema("node string").parquet(f"{output}/nodes").count()
+    )
     summary["statements"] = st.count()
-    try:
-        summary["observed"] = {k: int(v) for k, v in obs.get.items()}
-    except Exception:
-        # metrics are ADVISORY and must never fail the job: when the
-        # extraction plan is served from a structurally-equal cached
-        # plan of an earlier in-session run (replay/concurrent resume),
-        # the observe node never executes and getRow() has no metrics
-        summary["observed"] = None
     if sparql:
         # query the JUST-MATERIALIZED edge table (reads back from disk,
         # so pushed predicate constants hit the parquet scan and the
@@ -445,9 +441,10 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             else:
                 res = sparql_select(edges_df, sparql)
             res.write.mode("overwrite").parquet(f"{output}/query")
-            summary["query_rows"] = spark.read.parquet(f"{output}/query").count()
+            summary["query_rows"] = written("query").count()
+    resumed = sorted(done_stages.intersection(executed))
     if resumed:
-        summary["resumed_stages"] = sorted(resumed)
+        summary["resumed_stages"] = resumed
     statements.unpersist()
     if dictionary:
         links.unpersist()

@@ -59,6 +59,7 @@ Scale notes (10^12-turn corpus):
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -96,8 +97,8 @@ def _fold(labels: DataFrame, l2: DataFrame) -> DataFrame:
     ).select("node", F.coalesce("_nc", "component").alias("component"))
 
 
-def _union_find(pairs) -> list[tuple[str, str]]:
-    """Edge pairs → [(node, root)] for every endpoint, root = the min
+def _union_find(pairs) -> dict[str, str]:
+    """Edge pairs → {node: root} for every endpoint, root = the min
     member id of its component: each union attaches the larger root
     under the smaller, so a root is always its set's minimum. Python
     compares str by code point, which is the order of Spark's binary
@@ -116,18 +117,19 @@ def _union_find(pairs) -> list[tuple[str, str]]:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return [(x, find(x)) for x in parent]
+    return {x: find(x) for x in list(parent)}
 
 
 def _finish(spark, edges) -> DataFrame:
     """The driver finish: a collected (src, dst) Arrow table → (node,
-    component). Arrow, not Row objects: at 10^6 edges ``toArrow()``
-    takes 2–2.5 s where ``collect()`` takes 9–10 s (SCALE.md §2)."""
-    pairs = zip(edges.column("src").to_pylist(),
-                edges.column("dst").to_pylist())
-    return spark.createDataFrame(
-        _union_find(pairs), "node string, component string"
-    )
+    component). Arrow both ways, not Row objects or tuples: 3–5× faster
+    each way at 10^6 edges (SCALE.md §2)."""
+    roots = _union_find(zip(edges.column("src").to_pylist(),
+                            edges.column("dst").to_pylist()))
+    return spark.createDataFrame(pa.table({
+        "node": pa.array(list(roots), pa.string()),
+        "component": pa.array(list(roots.values()), pa.string()),
+    }))
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:

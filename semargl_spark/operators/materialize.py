@@ -11,9 +11,9 @@ Spark-first shape:
 * every stage emits per-partition lineage rows (run_id, stage,
   partition_id, input/output/error rows, order-insensitive checksum,
   wall time) plus one stage-summary row. The lineage table is the
-  run's stage ledger: checkpoint-resume works per stage, from the
-  distinct ``stage`` names recorded for the run_id — a recorded stage
-  skips its writes on retry (jobs/run_pipeline.py).
+  run's stage ledger: a stage recorded for the run_id skips its writes
+  on resume, and the job's summary reads its stage counts from the
+  stage-summary rows (jobs/run_pipeline.py).
 """
 
 from __future__ import annotations
@@ -91,13 +91,18 @@ def lineage_rows(
     row_hash=None,
 ) -> DataFrame:
     """Per-partition lineage/metrics (FIXTURES.md §5): one row per
-    partition with row counts and an order-insensitive checksum.
+    partition with row counts and an order-insensitive checksum, plus
+    one stage-summary row (``partition_id = -1``).
 
     ``error_rows`` counts processor-graph rows when the frame carries an
     ``obj_kind`` column (statements-shaped input), else 0. Each stage
     audits its output frame only, so ``input_rows`` equals
     ``output_rows``. ``wall_ms`` is not measured by this aggregate (0);
     the job-level summary carries wall time.
+
+    The frame is read once: the stage row sums the per-partition rows'
+    raw counts and hash sums (checksums are formatted afterwards), and
+    exists even for an empty stage, so the ledger records completion.
 
     By default the shard key is the *physical* partition id
     (``spark_partition_id``) and the row hash Spark's murmur3 — fastest,
@@ -112,34 +117,29 @@ def lineage_rows(
         if "obj_kind" in cols
         else F.lit(0)
     )
-    hashed = df.select(
+    per_partition = df.select(
         (F.spark_partition_id() if shard is None else shard).alias("partition_id"),
         (F.hash(*cols) if row_hash is None else row_hash).alias("h"),
         err.alias("is_err"),
-    )
-    aggs = [
+    ).groupBy("partition_id").agg(
         F.count("*").cast("long").alias("output_rows"),
         F.coalesce(F.sum("is_err"), F.lit(0)).cast("long").alias("error_rows"),
-        F.format_string(
-            "%016x", F.coalesce(F.sum(F.col("h").cast("long")), F.lit(0))
-        ).alias("checksum"),
-    ]
-    per_partition = hashed.groupBy("partition_id").agg(*aggs)
-    # stage-summary row, partition_id = -1: a GLOBAL aggregate yields one
-    # row even for an empty stage (e.g. canon with no non-trivial
-    # merges), so the ledger always records stage completion — a
-    # partition-only ledger would re-run empty stages on every resume
-    summary = hashed.agg(*aggs).select(
-        F.lit(-1).alias("partition_id"), "output_rows", "error_rows", "checksum"
+        F.coalesce(F.sum(F.col("h").cast("long")), F.lit(0)).alias("h"),
     )
-    return per_partition.unionByName(summary).select(
+    # a global aggregate yields its one row even over no partitions
+    stage_row = per_partition.agg(
+        F.lit(-1).alias("partition_id"),
+        *(F.coalesce(F.sum(c), F.lit(0)).cast("long").alias(c)
+          for c in ("output_rows", "error_rows", "h")),
+    )
+    return per_partition.unionByName(stage_row).select(
         F.lit(run_id).alias("run_id"),
         F.lit(stage).alias("stage"),
         F.col("partition_id").cast("int"),
         F.col("output_rows").alias("input_rows"),
         "output_rows",
         "error_rows",
-        "checksum",
+        F.format_string("%016x", "h").alias("checksum"),
         F.lit(0).cast("long").alias("wall_ms"),
     )
 
@@ -324,25 +324,16 @@ def materialize_kg(
     components: DataFrame | None,
     out_dir: str,
     run_id: str | None = None,
-) -> dict:
-    """merge stage: write nodes/edges/lineage; returns summary counts.
-
-    nodes/edges are checkpointed before the writes: each is otherwise
-    recomputed (distinct shuffle included) for the write, the lineage
-    audit, and the count — and the lineage checksum must describe the
-    same materialization that was written."""
+) -> str:
+    """merge stage: write nodes, edges and the edges' ledger rows;
+    returns the run id the rows carry. ``kg_edges`` is checkpointed, so
+    the ledger checksum describes the edges that were written."""
     run_id = run_id or f"run-{int(time.time())}"
-    nodes = kg_nodes(triples, components).localCheckpoint(eager=False)
-    edges = kg_edges(triples, components).localCheckpoint(eager=False)
-    write_partitioned(nodes, f"{out_dir}/nodes", "node")
+    edges = kg_edges(triples, components)
+    write_partitioned(kg_nodes(triples, components), f"{out_dir}/nodes", "node")
     write_partitioned(edges, f"{out_dir}/edges", "src")
-    lineage = lineage_rows(edges, run_id, "merge")
-    write_lineage(lineage, f"{out_dir}/lineage")
-    return {
-        "run_id": run_id,
-        "nodes": nodes.count(),
-        "edges": edges.count(),
-    }
+    write_lineage(lineage_rows(edges, run_id, "merge"), f"{out_dir}/lineage")
+    return run_id
 
 
 def compact_parquet(
