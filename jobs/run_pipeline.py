@@ -406,15 +406,11 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
     ):
         if name in ledger:
             summary[key] = ledger[name]["output_rows"]
-    # declared, not inferred: an empty graph writes no node files
-    summary["nodes"] = (
-        spark.read.schema("node string").parquet(f"{output}/nodes").count()
-    )
+    summary["nodes"] = written("nodes").count()
     summary["statements"] = st.count()
     if sparql:
-        # query the JUST-MATERIALIZED edge table (reads back from disk,
-        # so pushed predicate constants hit the parquet scan and the
-        # src-partitioned layout prunes constant-subject patterns)
+        # query the JUST-MATERIALIZED edge table (read back from disk,
+        # so pushed predicate constants hit the parquet scan)
         import re as _re
 
         from semargl_spark.operators.sparql import (
@@ -422,7 +418,7 @@ def run(spark, *, input_path: str, output: str, run_id: str | None = None,
             sparql_update,
         )
 
-        edges_df = spark.read.parquet(f"{output}/edges")
+        edges_df = written("edges")
         head = _re.sub(r"(?i)PREFIX\s+\w*:\s*<[^>]*>", "", sparql).strip()
         verb = head.split(None, 1)[0].upper() if head else ""
         if verb == "ASK":

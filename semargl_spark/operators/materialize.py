@@ -3,11 +3,10 @@
 third-party store sinks, CharOutputSink.java:34-198).
 
 Spark-first shape:
-* nodes/edges written as parquet partitioned by a stable bucket of the
-  node id — ``partitionOverwriteMode=dynamic`` makes re-runs of a subset
-  of input partitions idempotent (the Iceberg MERGE stand-in available
-  in this sandbox; the write path is isolated here so an Iceberg catalog
-  can swap in);
+* nodes/edges are plain parquet tables, overwritten whole: a run into a
+  used output dir leaves exactly that run's graph (canonical ids come
+  from a global connected-components pass, so a row-level merge into an
+  earlier graph would keep stale ids);
 * every stage emits per-partition lineage rows (run_id, stage,
   partition_id, input/output/error rows, order-insensitive checksum,
   wall time) plus one stage-summary row. The lineage table is the
@@ -22,10 +21,6 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..spark_util import is_missing_path, is_missing_table
-
-N_BUCKETS = 64
 
 
 def kg_nodes(triples: DataFrame, components: DataFrame | None = None) -> DataFrame:
@@ -161,242 +156,23 @@ def write_lineage(lineage: DataFrame, path: str) -> None:
     )
 
 
-def write_partitioned(df: DataFrame, path: str, bucket_col: str = "src") -> None:
-    """Idempotent partitioned write: dynamic partition overwrite over a
-    stable id bucket → re-running a subset only rewrites its partitions."""
-    (
-        df.withColumn("bucket", F.pmod(F.hash(bucket_col), F.lit(N_BUCKETS)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
-def iceberg_catalog(spark) -> str | None:
-    """Name of a configured Iceberg catalog in this session, or None.
-
-    A catalog counts as configured when ``spark.sql.catalog.<name>``
-    points at an Iceberg Spark catalog class. Deployments can name
-    theirs explicitly via ``spark.semargl.iceberg.catalog``; otherwise
-    the conventional names (``iceberg``, ``local``, ``spark_catalog``)
-    are probed. Callers use it to pick a catalog for
-    ``merge_upsert(..., backend="iceberg")`` — pure conf inspection, no
-    JVM access, so it works identically under Spark Connect."""
-    names: list[str] = []
-    try:
-        names.append(spark.conf.get("spark.semargl.iceberg.catalog"))
-    except Exception:
-        pass
-    names += ["iceberg", "local", "spark_catalog"]
-    for n in names:
-        if not n:
-            continue
-        try:
-            cls = spark.conf.get(f"spark.sql.catalog.{n}")
-        except Exception:
-            continue
-        if cls and "iceberg" in cls.lower():
-            return n
-    return None
-
-
-def _merge_upsert_iceberg(
-    spark, table: str, updates: DataFrame, key_cols: list[str]
-) -> dict:
-    """The real ``MERGE INTO`` upsert for an Iceberg table identifier —
-    WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT *, the exact
-    statement the parquet stand-in's differential test
-    (tests/test_merge_semantics.py) pins row-for-row against DuckDB's
-    upsert, so the two backends are interchangeable to callers. The
-    update/insert split is counted with a left-semi against the current
-    snapshot BEFORE the merge (Iceberg's MERGE reports no row counts to
-    the session); a missing table is created from the delta. The delta
-    is evaluated once, so the counts and the merge see the same rows."""
-    updates = updates.localCheckpoint(eager=True)
-    try:
-        cur = spark.table(table)
-    except Exception as exc:
-        if not is_missing_table(exc):
-            raise
-        updates.writeTo(table).using("iceberg").create()
-        return {"updated": 0, "inserted": updates.count()}
-    n_updated = cur.join(updates.select(*key_cols), key_cols, "left_semi").count()
-    n_inserted = updates.count() - n_updated
-    view = f"_semargl_merge_src_{abs(hash(table)) % 10**8}"
-    updates.createOrReplaceTempView(view)
-    on = " AND ".join(f"t.{k} = u.{k}" for k in key_cols)
-    try:
-        spark.sql(
-            f"MERGE INTO {table} t USING {view} u ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-    finally:
-        spark.catalog.dropTempView(view)
-    return {"updated": n_updated, "inserted": n_inserted}
-
-
-def merge_upsert(
-    spark,
-    path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    bucket_col: str | None = None,
-    backend: str = "parquet",
-) -> dict:
-    """``MERGE INTO`` stand-in over the bucketed parquet table at
-    ``path``: WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN
-    INSERT * — the upsert Iceberg's MERGE would run, expressed over the
-    dynamic-partition-overwrite layout :func:`write_partitioned` uses,
-    so an Iceberg catalog can swap in without changing callers.
-    Returns ``{"updated": n, "inserted": n}``.
-
-    Requires ``updates`` key-unique (real MERGE engines error on
-    multiple matches; pre-aggregate upstream). Semantics are
-    differential-tested against DuckDB's upsert
-    (INSERT .. ON CONFLICT DO UPDATE) in tests/test_merge_semantics.py.
-
-    Scale shape: only the buckets containing incoming keys are read and
-    rewritten — bucket values of the delta are collected (≤ N_BUCKETS
-    scalars), partition-prune the current table's scan, and the merged
-    content of just those buckets dynamic-overwrites; untouched buckets'
-    files are never opened. The merged frame is eagerly checkpointed
-    before the write because parquet has no snapshot isolation — the
-    read and the overwrite of the same files cannot overlap (this, plus
-    concurrent-writer atomicity, is exactly what the Iceberg swap buys;
-    the row-level outcome is identical).
-
-    Backend selection: only an explicit ``backend="iceberg"`` treats
-    ``path`` as an Iceberg table identifier and runs a real
-    ``MERGE INTO`` (:func:`_merge_upsert_iceberg`); any other value
-    keeps the parquet stand-in, so a relative path is never mistaken
-    for a catalog table. The differential test parametrizes over both
-    backends and skips the Iceberg leg when no catalog is configured.
-    """
-    if backend == "iceberg":
-        return _merge_upsert_iceberg(spark, path, updates, key_cols)
-    bucket_col = bucket_col or key_cols[0]
-    if bucket_col not in key_cols:
-        # Key equality only pins a row's bucket when the bucket column is
-        # part of the key: otherwise a matched current row whose
-        # bucket_col differs from the update's lands in an untouched
-        # bucket — neither replaced nor counted — leaving a duplicate key.
-        raise ValueError(
-            f"bucket_col {bucket_col!r} must be one of key_cols {key_cols!r}"
-        )
-    bucket = F.pmod(F.hash(bucket_col), F.lit(N_BUCKETS))
-    delta = updates.withColumn("bucket", bucket)
-    try:
-        current = spark.read.parquet(path)
-        table_exists = True
-    except Exception as exc:
-        # Only a genuinely missing table means "first write". Any other
-        # read failure (transient FS error, permissions) must propagate:
-        # proceeding would dynamic-overwrite the delta's buckets with
-        # delta-only rows, silently dropping every surviving row there.
-        if not is_missing_path(exc):
-            raise
-        table_exists = False
-    if not table_exists:
-        delta.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("bucket").parquet(path)
-        return {"updated": 0, "inserted": delta.count()}
-
-    touched = [r["bucket"] for r in delta.select("bucket").distinct().collect()]
-    cur = current.filter(F.col("bucket").isin(touched))
-    keys = key_cols
-    survivors = cur.join(updates.select(*keys), keys, "left_anti")
-    n_updated = cur.join(updates.select(*keys), keys, "left_semi").count()
-    n_inserted = updates.count() - n_updated
-    merged = survivors.unionByName(
-        delta.select(*cur.columns)
-    ).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("bucket").parquet(path)
-    return {"updated": n_updated, "inserted": n_inserted}
-
-
 def materialize_kg(
     triples: DataFrame,
     components: DataFrame | None,
     out_dir: str,
     run_id: str | None = None,
 ) -> str:
-    """merge stage: write nodes, edges and the edges' ledger rows;
-    returns the run id the rows carry. ``kg_edges`` is checkpointed, so
-    the ledger checksum describes the edges that were written."""
+    """merge stage: replace the nodes and edges tables with this graph
+    and write the edges' ledger rows; returns the run id the rows carry.
+    ``kg_edges`` is checkpointed, so the ledger checksum describes the
+    edges that were written."""
     run_id = run_id or f"run-{int(time.time())}"
     edges = kg_edges(triples, components)
-    write_partitioned(kg_nodes(triples, components), f"{out_dir}/nodes", "node")
-    write_partitioned(edges, f"{out_dir}/edges", "src")
+    nodes = kg_nodes(triples, components)
+    nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
+    edges.write.mode("overwrite").parquet(f"{out_dir}/edges")
     write_lineage(lineage_rows(edges, run_id, "merge"), f"{out_dir}/lineage")
     return run_id
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> dict:
-    """Small-file compaction: rewrite a parquet directory into
-    ceil(total_bytes / target_file_bytes) files → summary dict with
-    before/after file counts and the row count (verified unchanged).
-
-    The operational counterpart of Iceberg's rewrite_data_files: a
-    streaming or per-micro-batch writer leaves thousands of KB-sized
-    files per partition, and at 10^12-row scale the NameNode/manifest
-    pressure and per-file open cost dominate reads. Rewrite is atomic
-    at the directory level: the compacted copy is written beside the
-    original and swapped in with two renames, so a concurrent reader
-    sees the old or the new directory, never a half-written one. Row
-    count is re-verified after the swap; a mismatch raises (never
-    silently lose data to save file handles).
-    """
-    import math
-    import os
-    import shutil
-
-    if target_file_bytes < 1:
-        raise ValueError(f"target_file_bytes must be >= 1, got {target_file_bytes}")
-    df = spark.read.parquet(path)
-    n_rows = df.count()
-    files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(path)
-        for f in fn
-        if f.endswith(".parquet")
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / target_file_bytes))
-    tmp = path.rstrip("/") + "__compacting"
-    old = path.rstrip("/") + "__precompact"
-    df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
-    os.rename(path.rstrip("/"), old)
-    os.rename(tmp, path.rstrip("/"))
-    after = spark.read.parquet(path)
-    n_after = after.count()
-    if n_after != n_rows:
-        # roll back before raising — the original data is intact
-        os.rename(path.rstrip("/"), tmp)
-        os.rename(old, path.rstrip("/"))
-        raise RuntimeError(
-            f"compaction row-count mismatch: {n_rows} -> {n_after}; rolled back"
-        )
-    shutil.rmtree(old)
-    out_files = [
-        os.path.join(dp, f)
-        for dp, _dn, fn in os.walk(path)
-        for f in fn
-        if f.endswith(".parquet")
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(out_files),
-        "rows": n_rows,
-    }
 
 
 def edge_provenance(statements: DataFrame, transcripts: DataFrame) -> DataFrame:

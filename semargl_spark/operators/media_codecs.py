@@ -1818,18 +1818,6 @@ def _planes_to_rows(planes, comps, width, height, hmax, vmax):
     return width, height, rows
 
 
-def jpeg_features(payload: bytes) -> list[float]:
-    """Image feature vector, same shape as bmp/png_features."""
-    w, h, rows = decode_jpeg(payload)
-    n = w * h
-    sr = sum(p[0] for r in rows for p in r)
-    sg = sum(p[1] for r in rows for p in r)
-    sb = sum(p[2] for r in rows for p in r)
-    tl = rows[0][0]
-    return [2.0, float(w), float(h), float(sr // n), float(sg // n),
-            float(sb // n), float(tl[0]), float(tl[1] * 256 + tl[2])]
-
-
 def resize_jpeg(payload: bytes, new_w: int, new_h: int,
                 quality: int = 100, subsampling: str = "444") -> bytes:
     """Nearest-neighbor resample (floor mapping, matching

@@ -88,27 +88,14 @@ def is_missing_path(exc: Exception) -> bool:
     Readers that treat "table not created yet" as an empty table must
     use this to distinguish that one benign case from real read
     failures (transient FS/S3 errors, permissions): swallowing the
-    latter turns an upsert into a destructive overwrite or a
-    compaction fold into silent data loss, so everything that is not
-    a missing path re-raises."""
+    latter reads lost or unreadable data as "nothing yet", so
+    everything that is not a missing path re-raises."""
     from pyspark.errors import AnalysisException
 
     if not isinstance(exc, AnalysisException):
         return False
     msg = str(exc)
     return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
-def is_missing_table(exc: Exception) -> bool:
-    """True iff ``exc`` is Spark's table-not-found analysis error
-    (``TABLE_OR_VIEW_NOT_FOUND``) — the catalog counterpart of
-    :func:`is_missing_path`, with the same reason: every other lookup
-    failure must propagate rather than read as "no table yet"."""
-    from pyspark.errors import AnalysisException
-
-    return isinstance(exc, AnalysisException) and (
-        "TABLE_OR_VIEW_NOT_FOUND" in str(exc)
-    )
 
 
 def iterate(step, state, rounds: int, until=None):

@@ -54,65 +54,3 @@ def conversation_progress(statements: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# ---------------------------------------------------------------------------
-# Spark 4.x transformWithStateInPandas variant: the arbitrary-state v2
-# API (typed value/list/map state, timers, TTL) that supersedes
-# applyInPandasWithState. Kept alongside the v1 operator above — both
-# are part of the engine's stateful surface.
-
-
-def _user_totals_processor():
-    """Factory: a StatefulProcessor accumulating per-user event totals
-    in one typed ValueState row. Wrapped in a function so importing
-    this module never requires the v2 API (absent on older Sparks)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class UserTotals(StatefulProcessor):
-        def init(self, handle):
-            self._st = handle.getValueState("totals", "n long, v double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, v = 0, 0.0
-            if self._st.exists():
-                prev = self._st.get()
-                n, v = int(prev[0]), float(prev[1])
-            for pdf in rows:
-                n += len(pdf)
-                v += float(pdf["value"].sum())
-            self._st.update((n, v))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n": [n], "value_sum": [round(v, 6)]}
-            )
-
-        def close(self):
-            pass
-
-    return UserTotals()
-
-
-def user_event_totals(events: DataFrame) -> DataFrame:
-    """Streaming events(user_id, value) → running per-user totals via
-    ``transformWithStateInPandas`` (the Spark 4 arbitrary-state API:
-    typed ValueState in the state store, update-mode emissions).
-
-    Same scale/recovery properties as :func:`conversation_progress` —
-    state keyed on the shuffle key, fixed-width per key, checkpointed
-    per micro-batch, monotone emissions — expressed against the v2
-    API, which additionally supports timers/TTL for state eviction at
-    horizon scale (not needed for a drained availableNow run).
-
-    SANDBOX NOTE: executing this operator requires the ``protobuf``
-    package on driver and executors (the v2 state protocol serializes
-    state-server messages with it); this container ships pyspark
-    without protobuf, so the operator is exercised by a skip-guarded
-    test (tests/test_streaming_kg.py) and has no driver-gated query —
-    :func:`conversation_progress` (v1 API) is the gated stateful path.
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_user_totals_processor(),
-        outputStructType="user_id long, n long, value_sum double",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -340,8 +340,8 @@ def test_materialize_idempotent_rerun(spark):
     e1 = spark.read.parquet(f"{out}/edges").count()
     assert n1 > 0 and ledger_edges() == {"r1": e1}
 
-    # checkpoint-resume: a full re-run dynamically overwrites the same
-    # buckets — counts must not grow
+    # checkpoint-resume: a full re-run overwrites the node and edge
+    # tables — counts must not grow
     materialize_kg(st, None, out, run_id="r2")
     assert spark.read.parquet(f"{out}/nodes").count() == n1
     assert spark.read.parquet(f"{out}/edges").count() == e1
@@ -604,24 +604,6 @@ def test_cc_incremental_noop_delta_is_identity(spark):
     inc = {(r["node"], r["component"])
            for r in cc_incremental(comp0, delta).collect()}
     assert inc == {(r["node"], r["component"]) for r in comp0.collect()}
-
-
-def test_compact_parquet_reduces_files_and_preserves_rows(spark, tmp_path):
-    from semargl_spark.operators.materialize import compact_parquet
-
-    p = str(tmp_path / "many")
-    spark.range(0, 10_000).repartition(64).write.parquet(p)
-    before = len([f for f in __import__("os").listdir(p) if f.endswith(".parquet")])
-    assert before >= 32
-    summary = compact_parquet(spark, p, target_file_bytes=10**9)
-    assert summary["files_before"] == before
-    assert summary["files_after"] == 1
-    assert summary["rows"] == 10_000
-    assert spark.read.parquet(p).count() == 10_000
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        compact_parquet(spark, p, target_file_bytes=0)
 
 
 def test_edge_provenance_counts_and_timestamps(spark):

@@ -1,7 +1,7 @@
-"""Idempotency of the materialize/lineage seam (the Iceberg-MERGE
-stand-in): re-running the pipeline with the same run-id — including two
-overlapping ``--resume`` attempts — must not duplicate edges, nodes, or
-ledger rows.
+"""Idempotency of the materialize/lineage seam: re-running the pipeline
+with the same run-id — including two overlapping ``--resume`` attempts —
+must not duplicate edges, nodes, or ledger rows, and a run into a used
+output dir replaces the graph an earlier run left there.
 
 The reference never re-enters a sink (one StreamProcessor pass per
 document, BaseStreamProcessor.java); at 10^12-turn scale retried/zombie
@@ -466,8 +466,9 @@ def test_run_releases_every_frame_it_caches(spark, prepared, tmp_path):
 
 def test_resumed_empty_graph_reports_the_fresh_summary(spark, tmp_path):
     """A corpus of error rows only materializes an empty graph, whose
-    partitioned node table has no files: a resumed run still reports the
-    fresh run's counts instead of failing to read that table."""
+    node and edge tables still carry their schema: a resumed run reports
+    the fresh run's counts, and the SPARQL stage answers over no edges
+    instead of failing to read the edge table."""
     from pyspark.sql import functions as F
 
     spark.createDataFrame(
@@ -476,12 +477,42 @@ def test_resumed_empty_graph_reports_the_fresh_summary(spark, tmp_path):
         "tool string, ts timestamp",
     ).withColumn("fmt", F.lit("ntriples")).write.parquet(str(tmp_path / "in"))
     kw = dict(input_path=str(tmp_path / "in"), output=str(tmp_path / "out"),
-              run_id="r-empty")
+              run_id="r-empty",
+              sparql="SELECT ?a WHERE { ?a <urn:p:knows> ?b . }")
     fresh = run(spark, **kw)
     resumed = run(spark, **kw, resume=True)
     assert (fresh["nodes"], fresh["edges"], fresh["errors"]) == (0, 0, 1)
+    assert fresh["query_rows"] == 0
     assert resumed["resumed_stages"] == ["extract", "merge"]
     volatile = ("wall_sec", "resumed_stages")
     assert {k: v for k, v in resumed.items() if k not in volatile} == {
         k: v for k, v in fresh.items() if k not in volatile
     }
+
+
+def test_run_into_a_used_output_replaces_the_graph(spark, prepared, tmp_path):
+    """A second run with another input and run id into the same output
+    dir leaves exactly its own graph in the node and edge tables, and its
+    summary counts those tables."""
+    from pyspark.sql import functions as F
+
+    out = str(tmp_path / "out")
+    first = run(spark, input_path=str(prepared / "in"), output=out,
+                run_id="r-first")
+    assert first["edges"] > 1
+    spark.createDataFrame(
+        [("c1", 0, "<urn:e:1> <urn:p:knows> <urn:e:2> .", "user", None, None)],
+        "conv_id string, turn_idx int, text string, role string, "
+        "tool string, ts timestamp",
+    ).withColumn("fmt", F.lit("ntriples")).write.parquet(str(tmp_path / "in"))
+    second = run(spark, input_path=str(tmp_path / "in"), output=out,
+                 run_id="r-second")
+    nodes = spark.read.parquet(f"{out}/nodes")
+    edges = spark.read.parquet(f"{out}/edges")
+    assert {tuple(r) for r in nodes.select("node", "canonical").collect()} == {
+        ("urn:e:1", "urn:e:1"), ("urn:e:2", "urn:e:2"),
+    }
+    assert {tuple(r) for r in edges.select("src", "pred", "dst").collect()} == {
+        ("urn:e:1", "urn:p:knows", "urn:e:2"),
+    }
+    assert (second["nodes"], second["edges"]) == (nodes.count(), edges.count())

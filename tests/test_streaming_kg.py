@@ -194,59 +194,6 @@ def test_stream_sessions_match_batch_sessionizer(spark, tmp_path):
     assert rows == batch and len(rows) > 0
 
 
-def test_stream_state_v2_totals_match_batch(spark, tmp_path):
-    """transformWithStateInPandas per-user totals == batch aggregate.
-    Skipped where the v2 state protocol's protobuf dependency is absent
-    (this container ships pyspark without it)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from semargl_spark.streaming.stateful import user_event_totals
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    ev.repartition(4).write.mode("overwrite").parquet(str(tmp_path / "in"))
-    from pyspark.sql.types import (
-        StructField, StructType, TimestampNTZType, TimestampType,
-    )
-
-    schema = StructType([
-        StructField(
-            f.name,
-            TimestampType() if isinstance(f.dataType, TimestampNTZType) else f.dataType,
-            f.nullable,
-        )
-        for f in ev.schema.fields
-    ])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(str(tmp_path / "in"))
-        .select("user_id", "value")
-    )
-    q = (
-        user_event_totals(stream)
-        .writeStream.format("memory").queryName("tws_test")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    got = {
-        r["user_id"]: (r["n"], r["value_sum"])
-        for r in spark.table("tws_test")
-        .groupBy("user_id")
-        .agg(F.max("n").alias("n"), F.max_by("value_sum", "n").alias("value_sum"))
-        .collect()
-    }
-    exp = {
-        r["user_id"]: (r["n"], r["value_sum"])
-        for r in ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 6).alias("value_sum"))
-        .collect()
-    }
-    assert got == exp
-
-
 def test_stream_cardinality_merge_is_replay_idempotent(spark, tmp_path):
     """Re-draining the same input with a FRESH checkpoint re-offers
     every batch; bottom-k union merging must leave the persisted
